@@ -10,6 +10,13 @@ At 100 TB the scan is everything: always read Parquet through
 ``spark.read.parquet`` (vectorized reader, predicate pushdown, column
 pruning), partition output by a low-cardinality key when the downstream
 access pattern filters on it, and never infer schemas in production paths.
+
+Read schemas: a schema-less ``spark.read.parquet`` launches one
+schema-inference Spark job per call. :func:`table` and
+:func:`materialize_once` therefore read through :func:`read_parquet`,
+which infers a file's schema on its first read in the process and pins
+it (``spark.read.schema(...)``) on every later read of the same file
+stamp, so a warm read launches no job.
 """
 
 from __future__ import annotations
@@ -20,7 +27,8 @@ from .schemas import TABLES
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one fixture table (q01). Plain parquet scan: Catalyst handles
+    """Scan one fixture table (q01). Plain parquet scan through
+    :func:`read_parquet` (schema inferred once per file): Catalyst handles
     predicate pushdown and column pruning for whatever is layered on top.
 
     Timestamp note: the fixture's physical timestamp encoding has CHANGED
@@ -37,7 +45,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         produced.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     expected = TABLES.get(name)
     if expected is not None:
         actual = dict(df.dtypes)
@@ -52,6 +60,40 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                     df = df.withColumn(
                         field.name, F.col(field.name).cast("timestamp")
                     )
+    return df
+
+
+# (path, st_mtime_ns, st_size, st_ino) of the stamped file -> its inferred
+# schema. A rewritten file gets a new stamp and is inferred again; the
+# cache holds one entry per distinct file stamp read in the process.
+_SCHEMA_CACHE: dict[tuple[str, int, int, int], T.StructType] = {}
+
+
+def read_parquet(
+    spark: SparkSession, path: str, stamp_path: str | None = None
+) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema inferred once per file.
+
+    The first read of a file stamp is the plain inferred read (one Spark
+    job); its schema is cached under the stamp of ``stamp_path`` (default
+    ``path``; a memo passes its ``_SUCCESS`` marker) and every later read
+    pins it with ``spark.read.schema(...)``, which launches no job and
+    yields the same dtypes. Fail-open: a path this process cannot
+    ``os.stat`` (``s3://...``, a missing file) takes the plain inferred
+    read and is never cached."""
+    import os
+
+    stamp_path = stamp_path or path
+    try:
+        st = os.stat(stamp_path)
+    except OSError:
+        return spark.read.parquet(path)
+    key = (stamp_path, st.st_mtime_ns, st.st_size, st.st_ino)
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMA_CACHE[key] = df.schema
     return df
 
 
@@ -319,15 +361,20 @@ def materialize_once(
     leaves no data files and no partition directories, so schema
     inference fails with UNABLE_TO_INFER_SCHEMA; the empty-input walk's
     finding, and this module's own header rule: never infer schemas in
-    production paths)."""
+    production paths). Without one, reads go through :func:`read_parquet`
+    stamped on the ``_SUCCESS`` marker: the schema is inferred on the
+    process's first read of a memo and pinned on every later hit, so a
+    hit launches no Spark job."""
     import os
     import uuid
 
-    def _read():
-        reader = spark.read.schema(schema) if schema is not None else spark.read
-        return reader.parquet(out)
-
     done = os.path.join(out, "_SUCCESS")
+
+    def _read():
+        if schema is not None:
+            return spark.read.schema(schema).parquet(out)
+        return read_parquet(spark, out, stamp_path=done)
+
     if os.path.exists(done):
         return _read()
     os.makedirs(os.path.dirname(out), exist_ok=True)

@@ -191,7 +191,15 @@ def kmeans_fit(
 
     ``source`` (q331): train over a provided (vec_id, embedding) frame
     instead of the embeddings table — e.g. a sliced-subvector view for
-    per-subspace PQ codebooks."""
+    per-subspace PQ codebooks.
+
+    The canonical model (none of the three options) is memoized, and its
+    memo keys are derived before any plan is built: the Lloyd chain and
+    the assignment exist only inside the ``write_fn`` callbacks, so a
+    memo hit builds no training plan and launches no training job (and,
+    once the process has read the memo's schema, no Spark job at all)."""
+    if train_where is None and init_centroids is None and source is None:
+        return _kmeans_fit_canonical(spark, sf_dir, k, iterations)
     em = (
         source
         if source is not None
@@ -206,59 +214,80 @@ def kmeans_fit(
             F.col("embedding").alias("cent_emb"),
         )
     else:
-        centroids = em.filter(F.col("vec_id") < k).select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("embedding").alias("cent_emb"),
-        )
+        centroids = _first_k(em, k)
+    assigned, centroids = _lloyd(train, centroids, iterations)
+    if train_where is not None:
+        assigned = assign_to_centroids(em, centroids)
+    return assigned, centroids
+
+
+def _first_k(em: DataFrame, k: int) -> DataFrame:
+    """The deterministic first-k init: vectors 0..k-1 as centroids."""
+    return em.filter(F.col("vec_id") < k).select(
+        F.col("vec_id").alias("cent_id"),
+        F.col("embedding").alias("cent_emb"),
+    )
+
+
+def _lloyd(
+    train: DataFrame, centroids: DataFrame, iterations: int
+) -> tuple[DataFrame, DataFrame]:
+    """``iterations`` lazy Lloyd steps over ``train``: (final assignment,
+    the centroids that produced it)."""
     assigned = assign_to_centroids(train, centroids)
     for _ in range(iterations - 1):
         recomputed = recompute_centroids(assigned)
         emptied = centroids.join(recomputed, "cent_id", "left_anti")
         centroids = recomputed.unionByName(emptied)
         assigned = assign_to_centroids(train, centroids)
-    if train_where is not None:
-        assigned = assign_to_centroids(em, centroids)
-    canonical = (
-        train_where is None and init_centroids is None and source is None
-    )
-    if canonical:
-        # The model every IVF query shares (first-k init, full corpus)
-        # PERSISTS — the docstring posture "the assignment table persists
-        # partitioned by cent_id" made real: without this, each of the
-        # half-dozen IVF-family queries re-runs the whole lazy Lloyd
-        # chain per DataFrame reference (trainings are the dominant cost
-        # of the family's driver walk). materialize_once keyed by
-        # sf + source stamp + (k, iterations) + a version token (bump
-        # v1 if the Lloyd kernel changes, else a stale memo would serve
-        # old assignments — the differential walk fails loudly if so).
-        # float32 parquet round-trip is exact, so the memoized model is
-        # bit-identical to the lazy one.
-        import os
-        import tempfile
-
-        from ..io import materialize_once, source_stamp
-
-        slug = sf_dir.strip("/").replace("/", "_")
-        stamp = source_stamp(os.path.join(sf_dir, "embeddings.parquet"))
-        base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-        ckey = os.path.join(
-            base, f"kmeans_cent_v1_k{k}_i{iterations}_{slug}_{stamp}"
-        )
-        akey = os.path.join(
-            base, f"kmeans_asg_v1_k{k}_i{iterations}_{slug}_{stamp}"
-        )
-        cents_m = materialize_once(
-            spark, ckey, lambda p: centroids.write.parquet(p)
-        )
-        # rebuild the assignment FROM the materialized centroids so the
-        # training chain executes exactly once (for the cents write)
-        asg_m = materialize_once(
-            spark,
-            akey,
-            lambda p: assign_to_centroids(em, cents_m).write.parquet(p),
-        )
-        return asg_m, cents_m
     return assigned, centroids
+
+
+def _kmeans_fit_canonical(
+    spark, sf_dir, k: int, iterations: int
+) -> tuple[DataFrame, DataFrame]:
+    """The model every IVF query shares (first-k init, full corpus)
+    PERSISTS — the docstring posture "the assignment table persists
+    partitioned by cent_id" made real: without this, each of the
+    half-dozen IVF-family queries re-runs the whole lazy Lloyd chain per
+    DataFrame reference (trainings are the dominant cost of a walk
+    over the family). materialize_once keyed by sf + source stamp +
+    (k, iterations) + a version token (bump v1 if the Lloyd kernel
+    changes, else a stale memo would serve old assignments — the
+    differential walk fails loudly if so). float32 parquet round-trip is
+    exact, so the memoized model is bit-identical to the lazy one."""
+    import os
+    import tempfile
+
+    from ..io import materialize_once, source_stamp
+
+    slug = sf_dir.strip("/").replace("/", "_")
+    stamp = source_stamp(os.path.join(sf_dir, "embeddings.parquet"))
+    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
+    ckey = os.path.join(
+        base, f"kmeans_cent_v1_k{k}_i{iterations}_{slug}_{stamp}"
+    )
+    akey = os.path.join(
+        base, f"kmeans_asg_v1_k{k}_i{iterations}_{slug}_{stamp}"
+    )
+
+    def embeddings() -> DataFrame:
+        return table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+
+    def write_centroids(path: str) -> None:
+        em = embeddings()
+        _, centroids = _lloyd(em, _first_k(em, k), iterations)
+        centroids.write.parquet(path)
+
+    cents_m = materialize_once(spark, ckey, write_centroids)
+    # rebuild the assignment FROM the materialized centroids so the
+    # training chain executes exactly once (for the cents write)
+    asg_m = materialize_once(
+        spark,
+        akey,
+        lambda p: assign_to_centroids(embeddings(), cents_m).write.parquet(p),
+    )
+    return asg_m, cents_m
 
 
 def kmeans(spark, sf_dir, k: int = _K, iterations: int = 3) -> DataFrame:

@@ -445,6 +445,27 @@ def q319_ivf_trained(spark, sf_dir) -> DataFrame:
     return _ivf_search_with_recall(spark, sf_dir, asg)
 
 
+def _with_recall(
+    found: DataFrame, exact: DataFrame, top_k: int
+) -> DataFrame:
+    """``found``'s (query_id, neighbor_id, ...) rows plus ``recall``: the
+    share of the query's exact top-``top_k`` (query_id, neighbor_id)
+    pairs that ``found`` holds, rounded to 6 places. One pass over
+    ``found``: exact's rows are tagged, left-joined on (both sides hold
+    each pair at most once, so no row is added or lost), and the tags
+    are counted per query; a query with no hits reads 0.0."""
+    n_hit = F.count("__hit").over(Window.partitionBy("query_id"))
+    return (
+        found.join(
+            exact.withColumn("__hit", F.lit(1)),
+            ["query_id", "neighbor_id"],
+            "left",
+        )
+        .withColumn("recall", F.round(n_hit / float(top_k), 6))
+        .drop("__hit")
+    )
+
+
 def _ivf_search_with_recall(spark, sf_dir, asg: DataFrame) -> DataFrame:
     """Single-probe IVF search + in-result recall@k against the exact
     brute-force top-k — the shared evaluate stage of q319 (full-corpus
@@ -490,21 +511,11 @@ def _ivf_search_with_recall(spark, sf_dir, asg: DataFrame) -> DataFrame:
         .filter(F.col("rn") <= _IVF_TOP_K)
         .select("query_id", "neighbor_id")
     )
-    matched = (
-        ivf.join(exact, ["query_id", "neighbor_id"], "semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hit"))
-    )
-    return (
-        ivf.join(matched, "query_id", "left")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("sim_raw", 6).alias("sim"),
-            F.round(
-                F.coalesce(F.col("n_hit"), F.lit(0)) / float(_IVF_TOP_K), 6
-            ).alias("recall"),
-        )
+    return _with_recall(ivf, exact, _IVF_TOP_K).select(
+        "query_id",
+        "neighbor_id",
+        F.round("sim_raw", 6).alias("sim"),
+        "recall",
     )
 
 
@@ -718,21 +729,11 @@ def q323_ivf_multiprobe(spark, sf_dir) -> DataFrame:
         .filter(F.col("rn") <= _IVF_TOP_K)
         .select("query_id", "neighbor_id")
     )
-    matched = (
-        ivf.join(exact, ["query_id", "neighbor_id"], "semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hit"))
-    )
-    return (
-        ivf.join(matched, "query_id", "left")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("sim_raw", 6).alias("sim"),
-            F.round(
-                F.coalesce(F.col("n_hit"), F.lit(0)) / float(_IVF_TOP_K), 6
-            ).alias("recall"),
-        )
+    return _with_recall(ivf, exact, _IVF_TOP_K).select(
+        "query_id",
+        "neighbor_id",
+        F.round("sim_raw", 6).alias("sim"),
+        "recall",
     )
 
 
@@ -906,21 +907,14 @@ def q339_ivf_filtered(spark, sf_dir) -> DataFrame:
         .filter(F.col("rn") <= _IVF_TOP_K)
         .select("query_id", "neighbor_id")
     )
-    matched = (
-        ivf.join(exact, ["query_id", "neighbor_id"], "semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hit"))
-    )
     return (
-        ivf.join(matched, "query_id", "left")
+        _with_recall(ivf, exact, _IVF_TOP_K)
         .join(sel, "query_id")
         .select(
             "query_id",
             "neighbor_id",
             F.round("sim_raw", 6).alias("sim"),
-            F.round(
-                F.coalesce(F.col("n_hit"), F.lit(0)) / float(_IVF_TOP_K), 6
-            ).alias("recall"),
+            "recall",
             "probe_selectivity",
         )
     )
@@ -1591,19 +1585,12 @@ def q328_ivf_adc(spark, sf_dir) -> DataFrame:
         .filter(F.col("rn") <= _IVF_TOP_K)
         .select("query_id", "neighbor_id")
     )
-    matched = (
-        ivf.join(exact, ["query_id", "neighbor_id"], "semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hit"))
-    )
-    return ivf.join(matched, "query_id", "left").select(
+    return _with_recall(ivf, exact, _IVF_TOP_K).select(
         "query_id",
         "neighbor_id",
         F.round("approx_raw", 6).alias("approx_sim"),
         F.round("exact_raw", 6).alias("exact_sim"),
-        F.round(
-            F.coalesce(F.col("n_hit"), F.lit(0)) / float(_IVF_TOP_K), 6
-        ).alias("recall"),
+        "recall",
     )
 
 
@@ -1898,21 +1885,14 @@ def q331_pq_adc(spark, sf_dir) -> DataFrame:
         .filter(F.col("rn") <= _PQ_TOP_K)
         .select("query_id", "neighbor_id")
     )
-    matched = (
-        pq.join(exact, ["query_id", "neighbor_id"], "semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hit"))
-    )
-    return pq.join(matched, "query_id", "left").select(
+    return _with_recall(pq, exact, _PQ_TOP_K).select(
         "query_id",
         "neighbor_id",
         "code1",
         "code2",
         F.round("approx_raw", 6).alias("approx_sim"),
         F.round("exact_raw", 6).alias("exact_sim"),
-        F.round(
-            F.coalesce(F.col("n_hit"), F.lit(0)) / float(_PQ_TOP_K), 6
-        ).alias("recall"),
+        "recall",
     )
 
 
@@ -2150,21 +2130,14 @@ def q340_pq_rotated(spark, sf_dir) -> DataFrame:
         .filter(F.col("rn") <= _PQ_TOP_K)
         .select("query_id", "neighbor_id")
     )
-    matched = (
-        pq.join(exact, ["query_id", "neighbor_id"], "semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hit"))
-    )
-    return pq.join(matched, "query_id", "left").select(
+    return _with_recall(pq, exact, _PQ_TOP_K).select(
         "query_id",
         "neighbor_id",
         "code1",
         "code2",
         F.round("approx_raw", 6).alias("approx_sim"),
         F.round("exact_raw", 6).alias("exact_sim"),
-        F.round(
-            F.coalesce(F.col("n_hit"), F.lit(0)) / float(_PQ_TOP_K), 6
-        ).alias("recall"),
+        "recall",
     )
 
 
@@ -2346,21 +2319,14 @@ def q334_ivfpq(spark, sf_dir) -> DataFrame:
         .filter(F.col("rn") <= _IVF_TOP_K)
         .select("query_id", "neighbor_id")
     )
-    matched = (
-        ivfpq.join(exact, ["query_id", "neighbor_id"], "semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hit"))
-    )
-    return ivfpq.join(matched, "query_id", "left").select(
+    return _with_recall(ivfpq, exact, _IVF_TOP_K).select(
         "query_id",
         "neighbor_id",
         "code1",
         "code2",
         F.round("approx_raw", 6).alias("approx_sim"),
         F.round("exact_raw", 6).alias("exact_sim"),
-        F.round(
-            F.coalesce(F.col("n_hit"), F.lit(0)) / float(_IVF_TOP_K), 6
-        ).alias("recall"),
+        "recall",
     )
 
 
@@ -2631,21 +2597,14 @@ def q335_ivfpq_residual(spark, sf_dir) -> DataFrame:
         .filter(F.col("rn") <= _IVF_TOP_K)
         .select("query_id", "neighbor_id")
     )
-    matched = (
-        ivfpq.join(exact, ["query_id", "neighbor_id"], "semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hit"))
-    )
-    return ivfpq.join(matched, "query_id", "left").select(
+    return _with_recall(ivfpq, exact, _IVF_TOP_K).select(
         "query_id",
         "neighbor_id",
         "code1",
         "code2",
         F.round("approx_raw", 6).alias("approx_sim"),
         F.round("exact_raw", 6).alias("exact_sim"),
-        F.round(
-            F.coalesce(F.col("n_hit"), F.lit(0)) / float(_IVF_TOP_K), 6
-        ).alias("recall"),
+        "recall",
     )
 
 
@@ -2911,21 +2870,14 @@ def q337_ivfpq_percell(spark, sf_dir) -> DataFrame:
         .filter(F.col("rn") <= _IVF_TOP_K)
         .select("query_id", "neighbor_id")
     )
-    matched = (
-        ivfpq.join(exact, ["query_id", "neighbor_id"], "semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hit"))
-    )
-    return ivfpq.join(matched, "query_id", "left").select(
+    return _with_recall(ivfpq, exact, _IVF_TOP_K).select(
         "query_id",
         "neighbor_id",
         "code1",
         "code2",
         F.round("approx_raw", 6).alias("approx_sim"),
         F.round("exact_raw", 6).alias("exact_sim"),
-        F.round(
-            F.coalesce(F.col("n_hit"), F.lit(0)) / float(_IVF_TOP_K), 6
-        ).alias("recall"),
+        "recall",
     )
 
 

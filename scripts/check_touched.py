@@ -71,4 +71,7 @@ def main(out: str, names: list[str]) -> int:
 
 
 if __name__ == "__main__":
+    if len(sys.argv) < 2:
+        print(__doc__)
+        sys.exit(2)
     sys.exit(main(sys.argv[1], sys.argv[2:]))

@@ -71,11 +71,17 @@ def ensure_fixture() -> str:
     out = fixture_dir()
     if not os.path.exists(f"{out}/_BUILT"):
         build_fixture(out)
-    for tbl, key in (("lineitem", "l_orderkey"), ("orders", "o_orderkey")):
+    # ONE order-key span for both tables, max(l_orderkey, o_orderkey) + 1,
+    # so shard k's lineitem rows still join shard k's orders
+    keyed = (("lineitem", "l_orderkey"), ("orders", "o_orderkey"))
+    span = 1 + max(
+        int(pd.read_parquet(f"{SF01}/{tbl}.parquet", columns=[key])[key].max())
+        for tbl, key in keyed
+    )
+    for tbl, key in keyed:
         path = f"{out}/{tbl}.parquet"
         if not os.path.exists(path):
             df = pd.read_parquet(f"{SF01}/{tbl}.parquet")
-            span = int(df[key].max()) + 1
             parts = [df]
             for k in range(1, N_SHARDS):
                 d = df.copy()

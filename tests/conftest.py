@@ -27,6 +27,23 @@ def spark():
     yield spark
 
 
+def spark_jobs(spark, fn):
+    """(fn()'s result, ids of the Spark jobs fn launched), counted through
+    a fresh job group on this thread."""
+    import uuid
+
+    sc = spark.sparkContext
+    key = "spark.jobGroup.id"
+    prev = sc.getLocalProperty(key)
+    group = f"probe-{uuid.uuid4().hex[:12]}"
+    sc.setLocalProperty(key, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty(key, prev)
+    return result, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def make_duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
     """Replicates the driver's oracle setup: each fixture table registered
     as a DuckDB view over the same parquet files Spark reads."""

@@ -5,10 +5,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from eclypsium_etl_spark import plans
 from eclypsium_etl_spark.io import table
+from eclypsium_etl_spark.llm import clustering
 from eclypsium_etl_spark.llm.clustering import connected_components, kmeans
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, spark_jobs
 
 
 def test_connected_components_multihop(spark):
@@ -58,6 +60,26 @@ def test_kmeans_assignment_complete_and_stable(spark):
     m1 = {r.vec_id: r.cent_id for r in a.collect()}
     m2 = {r.vec_id: r.cent_id for r in kmeans(spark, SF_SMOKE, iterations=2).collect()}
     assert m1 == m2
+
+
+def test_warm_canonical_kmeans_is_memo_only(spark, monkeypatch):
+    """A second canonical kmeans_fit is a pure memo read: it builds no
+    training or assignment plan, launches no Spark job (no schema is
+    inferred again), its assignment scans only the memo, and its rows
+    equal the first call's."""
+    asg1, cents1 = clustering.kmeans_fit(spark, SF_SMOKE, iterations=2)
+    rows1 = sorted(asg1.collect()), sorted(cents1.collect())
+
+    def no_plan(*_):
+        raise AssertionError("a memo hit built an assignment plan")
+
+    monkeypatch.setattr(clustering, "assign_to_centroids", no_plan)
+    (asg2, cents2), jobs = spark_jobs(
+        spark, lambda: clustering.kmeans_fit(spark, SF_SMOKE, iterations=2)
+    )
+    assert jobs == []
+    assert plans.physical_plan(asg2).count("FileScan") == 1
+    assert (sorted(asg2.collect()), sorted(cents2.collect())) == rows1
 
 
 def test_star_contraction_matches_label_prop(spark):

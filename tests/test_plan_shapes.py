@@ -1020,3 +1020,19 @@ def test_q367_adjacency_join_is_equi(spark):
     rows = df.collect()
     assert len({r.phrase for r in rows}) == 5
     assert len({(r.phrase, r.doc_id) for r in rows}) > 5
+
+
+@pytest.mark.parametrize(
+    "qid",
+    ["q263_perplexity_bigram", "q318_posting_segments",
+     "q344_posting_hot_shards"],
+)
+def test_double_consumed_subtree_exchange_reused(spark, qid):
+    """These queries consume one shuffled subtree twice (q263's per-doc
+    bigram table, q318/q344's posting build) and were left without a
+    checkpoint because AQE reuses that exchange at runtime, so the corpus
+    is shuffled once. The reuse is decided while the query runs, so it
+    shows only in the final plan after the DataFrame's own execution."""
+    df = QUERIES[qid](spark, SF_CHECK)
+    df.collect()
+    assert "ReusedExchange" in plans.physical_plan(df)
