@@ -40,7 +40,7 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    queries = registry.ordered_queries()
+    queries, _ = registry.load_all()
     for label in (("warm",) if warm_only else ("cold", "warm")):
         times: dict[str, float] = {}
         t_pass = time.perf_counter()

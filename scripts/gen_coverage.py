@@ -1,20 +1,13 @@
 #!/usr/bin/env python
-"""Regenerate COVERAGE.md from the query registry + driver evidence.
+"""Regenerate COVERAGE.md from the query registry: one row per query id
+with its module, how it is verified locally and a one-line summary.
 
-Evidence truthfulness (VERDICT r4 "What's wrong" #2): the old header
-claimed every row was driver-checked; in fact the driver samples ~50
-queries per round, so many rows carry only local-parity evidence. This
-generator now reads every CORRECTNESS_r*.json in the repo root and emits
-a per-row `driver` column: the latest round that sampled the query and
-its outcome (e.g. `r4 green`, `r4 RED`), or `local-only` when no round
-has sampled it yet.
+    python scripts/gen_coverage.py
 """
 
 from __future__ import annotations
 
-import glob
 import inspect
-import json
 import os
 import re
 import sys
@@ -40,69 +33,20 @@ Declared boundary waivers (judge-visible, SURVEY §1.4 / VERDICT r4):
 """
 
 
-def driver_evidence() -> dict[str, str]:
-    """query id -> 'rN green' / 'rN RED' (latest round wins) or absent.
-
-    Paths sort by PARSED round number, not filename: lexicographic order
-    would put an unpadded CORRECTNESS_r10.json before r2..r9 and stale
-    outcomes would win (ADVICE r5)."""
-    out: dict[str, str] = {}
-
-    def _round_of(path: str) -> int:
-        m = re.search(r"r(\d+)", os.path.basename(path))
-        return int(m.group(1)) if m else 0
-
-    for path in sorted(glob.glob("CORRECTNESS_r*.json"), key=_round_of):
-        rnd = _round_of(path)
-        with open(path) as f:
-            data = json.load(f)
-        for name, row in data.items():
-            if row.get("err") == "no_oracle":
-                # declared rows-only query: the driver records the run
-                # and row count but no differential — that's the
-                # contract, not a failure
-                ran = row.get("spark_rows") is not None
-                out[name] = f"r{rnd} {'rows-only' if ran else 'RED'}"
-                continue
-            ok = (
-                not row.get("err")
-                and row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            )
-            out[name] = f"r{rnd} {'green' if ok else 'RED'}"
-    return out
-
-
 def main() -> None:
     import __spark_entry__ as entry
 
     queries = entry.queries()
     oracles = entry.oracle_sql()
-    evidence = driver_evidence()
-    n_driver = sum(1 for q in queries if q in evidence)
-    # As-of stamp (VERDICT r6 "what's wrong" #2): the generator runs
-    # before the NEXT driver walk, so the header names the round its
-    # evidence union actually reflects — one-walk lag is self-describing.
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob("CORRECTNESS_r*.json")
-        if (m := re.search(r"r(\d+)", os.path.basename(p)))
-    ]
-    as_of = f"r{max(rounds)}" if rounds else "none"
     lines = [
-        "# COVERAGE — query id → implementation → oracle → driver evidence",
+        "# COVERAGE — query id → implementation → oracle",
         "",
         "Generated by scripts/gen_coverage.py. `oracle` says how the query is",
         "verified locally (`full` = DuckDB differential at sf0.01, `rows-only`",
-        "= runs + stable schema). `driver` is the latest driver CORRECTNESS",
-        f"round that sampled the query (evidence as of {as_of}:",
-        f"{n_driver}/{len(queries)} sampled; `local-only` rows have local",
-        "parity evidence but no driver row yet — the driver samples ~50 ids",
-        "per round, so this file always lags the in-flight round by one walk).",
+        "= runs + stable schema).",
         WAIVERS,
-        "| query id | module | oracle | driver | summary |",
-        "|---|---|---|---|---|",
+        "| query id | module | oracle | summary |",
+        "|---|---|---|---|",
     ]
 
     def sort_key(name: str):
@@ -114,37 +58,11 @@ def main() -> None:
         mod = fn.__module__.replace("eclypsium_etl_spark.", "")
         doc = (inspect.getdoc(fn) or "").split(".")[0].replace("\n", " ")[:90]
         oracle = "full" if name in oracles else "rows-only"
-        drv = evidence.get(name, "local-only")
-        lines.append(f"| {name} | {mod} | {oracle} | {drv} | {doc} |")
+        lines.append(f"| {name} | {mod} | {oracle} | {doc} |")
 
-    # Oldest-driver-evidence tail (VERDICT r12 #7): the walk order in
-    # registry.ordered_queries() already refreshes oldest-first; surface
-    # the per-round histogram and the oldest cohort here so each round's
-    # ~50-id sample can be seen retiring the tail.
-    by_round: dict[int, list[str]] = {}
-    for name in queries:
-        m = re.match(r"r(\d+)", evidence.get(name, ""))
-        by_round.setdefault(int(m.group(1)) if m else 0, []).append(name)
-    lines += ["", "## Driver-evidence freshness", ""]
-    hist = ", ".join(
-        f"{'never' if r == 0 else f'r{r}'}: {len(ids)}"
-        for r, ids in sorted(by_round.items())
-    )
-    lines.append(f"Latest-driver-round histogram — {hist}.")
-    oldest = min((r for r in by_round if r > 0), default=0)
-    if oldest:
-        ids = sorted(by_round[oldest], key=sort_key)
-        lines += [
-            "",
-            f"Oldest driver evidence (r{oldest}, refreshed first by the "
-            "walk order): " + ", ".join(ids) + ".",
-        ]
     with open("COVERAGE.md", "w") as f:
         f.write("\n".join(lines) + "\n")
-    print(
-        f"COVERAGE.md: {len(queries)} queries, {len(oracles)} oracles, "
-        f"{n_driver} driver-sampled"
-    )
+    print(f"COVERAGE.md: {len(queries)} queries, {len(oracles)} oracles")
 
 
 if __name__ == "__main__":

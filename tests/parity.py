@@ -2,7 +2,8 @@
 
 Emulates the driver's correctness gate (row count + column names +
 order-insensitive value comparison) so every registered query is verified
-locally before the driver ever sees it.
+locally before the driver ever sees it. Pytest-free, so the scripts share
+the same DuckDB view setup (``make_duck``) and compare.
 """
 
 from __future__ import annotations
@@ -13,6 +14,25 @@ from decimal import Decimal
 
 import numpy as np
 import pandas as pd
+
+FIXTURE_TABLES = [
+    "region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings",
+]
+
+
+def make_duck(sf_dir: str):
+    """Replicates the driver's oracle setup: each fixture table registered
+    as a DuckDB view over the same parquet files Spark reads."""
+    import duckdb  # lazy: perfbench imports this module for canonical_rows
+
+    con = duckdb.connect()
+    for t in FIXTURE_TABLES:
+        con.execute(
+            f"CREATE OR REPLACE VIEW {t} AS "
+            f"SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
 
 
 def _norm_cell(v):

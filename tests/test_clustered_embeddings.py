@@ -28,13 +28,12 @@ import os
 import shutil
 import tempfile
 
-import duckdb
 import pytest
 
 from eclypsium_etl_spark import registry
 from eclypsium_etl_spark.io import source_stamp
 
-from .conftest import FIXTURE_TABLES, SF_CHECK
+from .conftest import FIXTURE_TABLES, SF_CHECK, make_duck
 from .parity import compare
 
 pytestmark = pytest.mark.skipif(
@@ -121,13 +120,7 @@ def clu_fx() -> str:
 
 @pytest.fixture(scope="session")
 def duck_clu(clu_fx):
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{clu_fx}/{t}.parquet')"
-        )
-    return con
+    return make_duck(clu_fx)
 
 
 def test_clusters_actually_planted(duck_clu):

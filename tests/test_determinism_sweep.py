@@ -35,7 +35,7 @@ pytestmark = pytest.mark.skipif(
 )
 
 
-@pytest.mark.parametrize("name", list(registry.ordered_queries()))
+@pytest.mark.parametrize("name", list(QUERIES))
 def test_rerun_is_value_identical(name, spark):
     if name not in ORACLE:
         pytest.skip("rows-only query (declared nondeterministic surface)")

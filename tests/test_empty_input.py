@@ -50,7 +50,7 @@ import pytest
 
 from eclypsium_etl_spark import registry
 
-from .conftest import FIXTURE_TABLES, SF_CHECK
+from .conftest import FIXTURE_TABLES, SF_CHECK, make_duck
 from .parity import compare
 
 pytestmark = pytest.mark.skipif(
@@ -108,13 +108,7 @@ def empty_fx() -> str:
 
 @pytest.fixture(scope="session")
 def duck_empty(empty_fx):
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{empty_fx}/{t}.parquet')"
-        )
-    return con
+    return make_duck(empty_fx)
 
 
 @pytest.mark.parametrize("name", GREEN)

@@ -51,7 +51,7 @@ import pytest
 from eclypsium_etl_spark import registry
 from eclypsium_etl_spark.io import source_stamp
 
-from .conftest import FIXTURE_TABLES, SF_CHECK
+from .conftest import FIXTURE_TABLES, SF_CHECK, make_duck
 from .parity import compare
 
 pytestmark = pytest.mark.skipif(
@@ -172,13 +172,7 @@ def extreme_fx() -> str:
 
 @pytest.fixture(scope="session")
 def duck_extreme(extreme_fx):
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{extreme_fx}/{t}.parquet')"
-        )
-    return con
+    return make_duck(extreme_fx)
 
 
 def test_extremes_actually_planted(duck_extreme):

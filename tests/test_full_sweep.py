@@ -35,7 +35,7 @@ pytestmark = pytest.mark.skipif(
 )
 
 
-@pytest.mark.parametrize("name", list(registry.ordered_queries()))
+@pytest.mark.parametrize("name", list(QUERIES))
 def test_sweep_query_under_ceiling(name, spark):
     t0 = time.perf_counter()
     df = QUERIES[name](spark, SF_SWEEP)

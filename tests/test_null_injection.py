@@ -52,7 +52,7 @@ import pytest
 from eclypsium_etl_spark import registry
 from eclypsium_etl_spark.io import source_stamp
 
-from .conftest import FIXTURE_TABLES, SF_CHECK
+from .conftest import FIXTURE_TABLES, SF_CHECK, make_duck
 from .parity import compare
 
 pytestmark = pytest.mark.skipif(
@@ -158,13 +158,7 @@ def null_fx() -> str:
 
 @pytest.fixture(scope="session")
 def duck_null(null_fx):
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{null_fx}/{t}.parquet')"
-        )
-    return con
+    return make_duck(null_fx)
 
 
 def test_masks_actually_inject(duck_null):

@@ -29,21 +29,52 @@ def test_oracle_plans_cleanly(name, duck):
     duck.execute(f"EXPLAIN {sql}")  # binder+planner; raises on any error
 
 
-def test_ordered_queries_is_a_permutation():
-    """The harness-facing ordering must expose exactly the registry — a
-    query added without an order entry still appears (appended), and a
-    stale order entry must not shadow or drop anything."""
+def test_queries_is_the_registry_in_registration_order():
+    """The harness-facing ``queries()`` is exactly the registry, in the
+    order the queries registered; every oracle names a registered query,
+    and q63 precedes q71, the order both register in llm/dedup.py."""
+    import __spark_entry__
+
     q, _ = registry.load_all()
-    ordered = registry.ordered_queries()
-    assert list(sorted(ordered)) == list(sorted(q))
-    assert len(registry._CHEAP_FIRST) == len(set(registry._CHEAP_FIRST))
-    # a typo'd/stale order entry would be silently skipped and the query
-    # appended last, breaking the baked-in constraints (e.g. q63 before
-    # q71) with everything green — so every entry must resolve
-    stale = set(registry._CHEAP_FIRST) - set(q)
-    assert not stale, f"stale _CHEAP_FIRST entries: {stale}"
-    order = list(ordered)
+    order = list(__spark_entry__.queries())
+    assert order == list(q)
+    assert set(__spark_entry__.oracle_sql()) <= set(order)
     assert order.index("q63_dedup_near") < order.index("q71_dedup_minhash_lsh")
+
+
+def test_driver_contract_reads_no_repo_root_json():
+    """``queries()`` and ``oracle_sql()`` depend on code alone: importing
+    the contract and calling both opens no ``*.json`` in the repo root
+    (no order or evidence is read from round artifacts)."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    probe = f"""
+import json, os, sys
+root = {root!r}
+sys.path.insert(0, root)
+opened = []
+
+def hook(event, args):
+    if event == "open" and isinstance(args[0], (str, bytes)):
+        path = os.path.abspath(os.fsdecode(args[0]))
+        if path.endswith(".json") and os.path.dirname(path) == root:
+            opened.append(path)
+
+sys.addaudithook(hook)
+import __spark_entry__
+sizes = [len(__spark_entry__.queries()), len(__spark_entry__.oracle_sql())]
+print(json.dumps([sizes, opened]))
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=root, capture_output=True, text=True, check=True,
+    ).stdout.strip().splitlines()[-1]
+    (n_queries, n_oracles), opened = json.loads(out)
+    assert n_queries > 0 and n_oracles > 0
+    assert opened == [], f"repo-root JSON opened: {opened}"
 
 
 def test_oracled_results_are_driver_hashable(spark):
@@ -334,53 +365,6 @@ def test_no_negative_zero_oracle_cells(duck):
     )
 
 
-def test_evidence_adaptive_ordering(tmp_path):
-    """ordered_queries() self-adapts to the driver's CORRECTNESS files:
-    red ids first, never-sampled second, green last, _CHEAP_FIRST
-    relative order preserved within each class. Pinned on synthetic
-    evidence (so the test survives future rounds changing the real
-    files) and on the live repo state (no green id may precede a
-    never-sampled one — the evidence-conversion contract)."""
-    import json
-
-    # synthetic: parse outcomes, latest round wins
-    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps({
-        "a": {"rows_match": True, "schema_match": True, "hash_match": True,
-              "err": None, "spark_rows": 1},
-        "b": {"rows_match": True, "schema_match": True, "hash_match": False,
-              "err": None, "spark_rows": 1},
-        "c": {"rows_match": None, "schema_match": None, "hash_match": None,
-              "err": "no_oracle", "spark_rows": 2},
-    }))
-    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps({
-        "b": {"rows_match": True, "schema_match": True, "hash_match": True,
-              "err": None, "spark_rows": 1},
-        "d": {"rows_match": None, "schema_match": None, "hash_match": None,
-              "err": "boom", "spark_rows": None},
-    }))
-    ev = registry._driver_evidence(root=str(tmp_path))
-    assert ev == {"a": True, "b": True, "c": True, "d": False}
-
-    # latest-wins must follow the PARSED round number: an unpadded r10
-    # sorts lexicographically before r2, so filename order would let the
-    # stale r2 outcome overwrite it (ADVICE r5)
-    (tmp_path / "CORRECTNESS_r10.json").write_text(json.dumps({
-        "b": {"rows_match": True, "schema_match": True, "hash_match": False,
-              "err": None, "spark_rows": 1},
-    }))
-    ev = registry._driver_evidence(root=str(tmp_path))
-    assert ev["b"] is False, "r10 outcome must beat r2, not filename order"
-
-    # live repo: classes must be contiguous red -> never -> green
-    live = registry._driver_evidence()
-    order = list(registry.ordered_queries())
-    classes = [
-        0 if live.get(n) is False else (1 if n not in live else 2)
-        for n in order
-    ]
-    assert classes == sorted(classes), "evidence classes out of order"
-
-
 def test_bench_headline_names_resolve():
     """bench.py's loop uses queries.get(name) and silently skips misses —
     a renamed/typo'd HEADLINE entry would quietly drop from the bench
@@ -450,35 +434,6 @@ def test_committed_bench_sidecar_is_a_real_run():
     assert d.get("n", 0) >= 2, (
         f"sidecar is an n={d.get('n')} single-pass — medians over "
         "BENCH_N>=2 required for a committable artifact"
-    )
-
-
-def test_staleness_retier_orders_rewrites_first():
-    """VERDICT r6 #3: within the driver-green class, ids whose
-    implementation changed AFTER their latest driver CORRECTNESS row
-    (STALENESS.json) must precede stale-but-unchanged greens, newest
-    change round first — leftover walk budget re-samples rewrites the
-    driver has never executed. Pinned on the live repo state (skipped if
-    STALENESS.json is absent)."""
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if not os.path.exists(os.path.join(root, "STALENESS.json")):
-        pytest.skip("STALENESS.json not generated")
-    rows = registry._driver_rows()
-    stale_round = registry._staleness()
-    order = list(registry.ordered_queries())
-    greens = [n for n in order if n in rows and rows[n][1]]
-    # greens must split into a contiguous stale block then fresh block,
-    # and the stale block must be sorted newest-change-round first
-    flags = [stale_round.get(n, 0) > rows[n][0] for n in greens]
-    assert flags == sorted(flags, reverse=True), (
-        "stale greens must be contiguous and precede fresh greens"
-    )
-    stale = [n for n in greens if stale_round.get(n, 0) > rows[n][0]]
-    impl = [stale_round[n] for n in stale]
-    assert impl == sorted(impl, reverse=True), (
-        "stale greens must be ordered newest implementation change first"
     )
 
 

@@ -51,7 +51,7 @@ import pytest
 from eclypsium_etl_spark import registry
 from eclypsium_etl_spark.io import source_stamp
 
-from .conftest import FIXTURE_TABLES, SF_CHECK
+from .conftest import FIXTURE_TABLES, SF_CHECK, make_duck
 from .parity import compare
 
 pytestmark = pytest.mark.skipif(
@@ -152,13 +152,7 @@ def skew_fx() -> str:
 
 @pytest.fixture(scope="session")
 def duck_skew(skew_fx):
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{skew_fx}/{t}.parquet')"
-        )
-    return con
+    return make_duck(skew_fx)
 
 
 def test_keys_actually_hot(duck_skew):

@@ -61,7 +61,7 @@ import pytest
 from eclypsium_etl_spark import registry
 from eclypsium_etl_spark.io import source_stamp
 
-from .conftest import FIXTURE_TABLES, SF_CHECK
+from .conftest import FIXTURE_TABLES, SF_CHECK, make_duck
 from .parity import compare
 
 pytestmark = pytest.mark.skipif(
@@ -192,13 +192,7 @@ def time_fx() -> str:
 
 @pytest.fixture(scope="session")
 def duck_time(time_fx):
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{time_fx}/{t}.parquet')"
-        )
-    return con
+    return make_duck(time_fx)
 
 
 def test_instants_actually_planted(duck_time):

@@ -34,13 +34,12 @@ import os
 import shutil
 import tempfile
 
-import duckdb
 import pytest
 
 from eclypsium_etl_spark import registry
 from eclypsium_etl_spark.io import source_stamp
 
-from .conftest import FIXTURE_TABLES, SF_CHECK
+from .conftest import FIXTURE_TABLES, SF_CHECK, make_duck
 from .parity import compare
 
 pytestmark = pytest.mark.skipif(
@@ -109,13 +108,7 @@ def unicode_fx() -> str:
 
 @pytest.fixture(scope="session")
 def duck_unicode(unicode_fx):
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{unicode_fx}/{t}.parquet')"
-        )
-    return con
+    return make_duck(unicode_fx)
 
 
 def test_fixture_actually_non_ascii(duck_unicode):
