@@ -17,9 +17,37 @@ schema-inference Spark job per call. :func:`table` and
 which infers a file's schema on its first read in the process and pins
 it (``spark.read.schema(...)``) on every later read of the same file
 stamp, so a warm read launches no job.
+
+Scratch, memo keys and commits are decided here and nowhere else:
+
+- Every intermediate lives under :func:`scratch_path` (resolved at call
+  time, so a process-private ``TMPDIR`` moves all of it).
+- A memo is named by :func:`memo_key`. The key rule: every input that
+  shapes the landed bytes is in the key — the FULL fixture path (two
+  fixtures sharing a basename never alias), the :func:`source_stamp` of
+  every source table the build reads (a regenerated fixture is never
+  served a stale intermediate), and every param: a version token bumped
+  when the kernel changes, model knobs, any session-dependent layout
+  width (a session at another core count must not be served a layout
+  fanned for another width), and the key of any upstream memo the build
+  derives from (so a rebuilt upstream can never be paired with a stale
+  derived memo).
+- A memo is committed write-once by :func:`build_once` (unique tmp path,
+  ``_SUCCESS`` marker, atomic rename), which :func:`materialize_once`
+  wraps with the read.
+- Per-invocation scratch (a lineage cut, a fixpoint's steps) comes from
+  :func:`scratch_dir` / :func:`pin` and is removed at process exit.
 """
 
 from __future__ import annotations
+
+import atexit
+import hashlib
+import os
+import re
+import shutil
+import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -81,8 +109,6 @@ def read_parquet(
     yields the same dtypes. Fail-open: a path this process cannot
     ``os.stat`` (``s3://...``, a missing file) takes the plain inferred
     read and is never cached."""
-    import os
-
     stamp_path = stamp_path or path
     try:
         st = os.stat(stamp_path)
@@ -133,7 +159,6 @@ def scan_units(path: str) -> tuple[int, int]:
     no-op. Unknown/empty results are NOT cached: a write-once memo
     directory that is empty now may be populated later."""
     import glob
-    import os
 
     cached = _LAYOUT_UNITS_CACHE.get(path)
     if cached is not None:
@@ -229,12 +254,10 @@ def table_spread(
 
 
 def source_stamp(path: str) -> str:
-    """Freshness stamp for a memoized derivation of ``path``: mtime+size of
-    the source file, embedded in the memo's directory name so a regenerated
-    fixture can never be served a stale intermediate (the cross-process
-    memo below outlives the process that built it)."""
-    import os
-
+    """Freshness stamp of a source file: its mtime and size. A memo built
+    from the file carries it in its :func:`memo_key`, so a regenerated
+    fixture is never served a stale intermediate (memos outlive the
+    process that built them)."""
     st = os.stat(path)
     return f"{int(st.st_mtime)}_{st.st_size}"
 
@@ -244,15 +267,74 @@ def fixture_suffix(sf_dir: str) -> str:
     locations: the sanitized fixture basename PLUS a short hash of the
     RAW basename, so sanitization collisions ('sf0.1' vs 'sf0_1') can
     never alias two fixtures' tables (ADVICE r12, the q351 rule)."""
-    import hashlib
-    import os
-    import re
-
     raw = os.path.basename(sf_dir)
     return (
         f"{re.sub(r'[^A-Za-z0-9_]', '_', raw)}"
         f"_{hashlib.sha1(raw.encode()).hexdigest()[:8]}"
     )
+
+
+def memo_key(tag: str, sf_dir: str, *sources: str, params=()) -> str:
+    """Identifier-safe (``[A-Za-z0-9_]``) name of a memo, for a directory
+    under :func:`scratch_path` or a catalog table: the readable ``tag``
+    and :func:`fixture_suffix`, then a hash of the full ``sf_dir`` path,
+    the :func:`source_stamp` of each ``sources`` table file (relative to
+    ``sf_dir``) and the ``repr`` of each param (module docstring: the key
+    rule)."""
+    if not re.fullmatch(r"[A-Za-z][A-Za-z0-9_]*", tag):
+        raise ValueError(f"memo tag must be an identifier: {tag!r}")
+    raw = "\0".join(
+        [sf_dir]
+        + [source_stamp(os.path.join(sf_dir, s)) for s in sources]
+        + [repr(p) for p in params]
+    )
+    digest = hashlib.sha1(raw.encode()).hexdigest()[:16]
+    return f"{tag}_{fixture_suffix(sf_dir)}_{digest}"
+
+
+def scratch_path(name: str) -> str:
+    """``name`` under the engine's scratch root (created on demand). The
+    root is resolved at every call, so a process that sets its own
+    ``TMPDIR`` keeps all of its intermediates inside it."""
+    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
+    os.makedirs(base, exist_ok=True)
+    return os.path.join(base, name)
+
+
+def stream_source_dir(sf_dir: str, table_name: str) -> str:
+    """Directory holding a symlink to one fixture table: the file-stream
+    source wants a directory, and the read-only fixture stays untouched.
+    The name is kept exactly (its own root, full-path slug): streaming
+    checkpoints record the source file paths it yields."""
+    staged = os.path.join(
+        tempfile.gettempdir(),
+        "eclypsium_stream_src",
+        sf_dir.strip("/").replace("/", "_") + "_" + table_name,
+    )
+    os.makedirs(staged, exist_ok=True)
+    link = os.path.join(staged, f"{table_name}.parquet")
+    if not os.path.exists(link):
+        os.symlink(f"{sf_dir}/{table_name}.parquet", link)
+    return staged
+
+
+def scratch_dir(tag: str) -> str:
+    """A fresh path under the scratch root, unique to this call and
+    removed (with whatever was written there) at process exit."""
+    path = scratch_path(f"{tag}_{uuid.uuid4().hex[:12]}")
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
+
+def pin(df: DataFrame, tag: str) -> DataFrame:
+    """Write ``df`` to a fresh :func:`scratch_dir` and read it back: a
+    lineage cut whose every later job sees the SAME rows (an eager write,
+    not a recomputed plan). The read uses ``df``'s schema, so it launches
+    no schema-inference job; disk, not ``localCheckpoint``, so nothing
+    accumulates in the block manager across invocations."""
+    path = scratch_dir(tag)
+    df.write.parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def _commit_dir(tmp: str, out: str, is_complete) -> None:
@@ -280,10 +362,7 @@ def _commit_dir(tmp: str, out: str, is_complete) -> None:
     The holder's install rename is additionally wrapped so that if a
     racer's complete build does land first (the residual pre-lock-check
     window), the holder keeps the racer's build instead of raising."""
-    import os
-    import shutil
     import time
-    import uuid
 
     lock = out + ".replace-lock"
     try:
@@ -338,50 +417,51 @@ def _commit_dir(tmp: str, out: str, is_complete) -> None:
             pass
 
 
+def build_once(out: str, write_fn) -> None:
+    """Write-once commit of the directory ``out``, in any format.
+
+    ``write_fn(tmp)`` writes the complete layout at ``tmp``, a path unique
+    to this call (it may create the directory itself or leave that to the
+    writer); a ``_SUCCESS`` marker is then ensured and the build is
+    atomically renamed into place by :func:`_commit_dir`. A present marker
+    skips the build. Cross-process safe: a second process can never
+    delete or overwrite files a first process is still reading; losing
+    the rename race discards our build and keeps theirs; a leftover
+    directory without a marker (a crashed writer, an older layout) is
+    replaced under the lockfile, never read."""
+    done = os.path.join(out, "_SUCCESS")
+    if os.path.exists(done):
+        return
+    os.makedirs(os.path.dirname(out), exist_ok=True)
+    tmp = f"{out}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+    write_fn(tmp)
+    os.makedirs(tmp, exist_ok=True)
+    open(os.path.join(tmp, "_SUCCESS"), "a").close()  # keeps a writer's marker
+    _commit_dir(tmp, out, lambda: os.path.exists(done))
+
+
 def materialize_once(
     spark: SparkSession, out: str, write_fn, schema=None
 ) -> DataFrame:
-    """Write-once shared parquet intermediate (the memo discipline behind
-    llm/dedup.shingles() and the q86 partitioned layout).
-
-    Cross-process safe: a COMPLETE output is detected via the _SUCCESS
-    marker (written last by the commit protocol), and builds go to a
-    per-process unique temp path that is atomically renamed into place —
-    so a second process can never delete or overwrite files a first
-    process's lazy DataFrame is still reading (the old mode("overwrite")
-    memo could). Losing the rename race just means another process
-    finished first; our build is discarded and theirs is read. The
-    crashed-writer replace path is lockfile-serialized in
-    :func:`_commit_dir`.
-
-    ``write_fn(path)`` must write the parquet dataset at ``path``.
+    """Write-once shared parquet intermediate: :func:`build_once` of
+    ``out`` (``write_fn(path)`` writes the parquet dataset at ``path``),
+    then the read.
 
     ``schema``: optional explicit read schema — REQUIRED for layouts
     that can legitimately be EMPTY (a partitionBy write of zero rows
     leaves no data files and no partition directories, so schema
-    inference fails with UNABLE_TO_INFER_SCHEMA; the empty-input walk's
-    finding, and this module's own header rule: never infer schemas in
-    production paths). Without one, reads go through :func:`read_parquet`
-    stamped on the ``_SUCCESS`` marker: the schema is inferred on the
-    process's first read of a memo and pinned on every later hit, so a
-    hit launches no Spark job."""
-    import os
-    import uuid
+    inference fails with UNABLE_TO_INFER_SCHEMA). Without one, reads go
+    through :func:`read_parquet` stamped on the ``_SUCCESS`` marker: the
+    schema is inferred on the process's first read of a memo and pinned
+    on every later hit, so a hit launches no Spark job.
 
-    done = os.path.join(out, "_SUCCESS")
-
-    def _read():
-        if schema is not None:
-            return spark.read.schema(schema).parquet(out)
-        return read_parquet(spark, out, stamp_path=done)
-
-    if os.path.exists(done):
-        return _read()
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    tmp = f"{out}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    write_fn(tmp)
-    _commit_dir(tmp, out, lambda: os.path.exists(done))
-    return _read()
+    Callers reach it as ``io.materialize_once`` at call time, never
+    through an import-time binding, so a wrapper installed on this
+    module (the benchmark's memo spans) sees every call."""
+    build_once(out, write_fn)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(out)
+    return read_parquet(spark, out, stamp_path=os.path.join(out, "_SUCCESS"))
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
@@ -424,8 +504,6 @@ def write_bucketed(
     Self-cleaning: the in-memory catalog forgets tables across sessions but
     their warehouse directories persist — drop both before writing or
     saveAsTable fails with LOCATION_ALREADY_EXISTS."""
-    import shutil
-
     spark = df.sparkSession
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
@@ -472,8 +550,6 @@ def ensure_bucketed(
     name — fold the new bucket count into the stamp); a layout with no
     manifest is treated as incomplete and rebuilt."""
     import json
-    import os
-    import uuid
 
     spark = df.sparkSession
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
@@ -624,8 +700,6 @@ def fetch_to_landing(
     schemes are restricted to http(s) by default — urlopen would otherwise
     happily fetch file:// or ftp:// targets. Hermetic tests that stage
     local fixtures opt in explicitly with allowed_schemes=("file",)."""
-    import os
-    import re
     import urllib.parse
     import urllib.request
 

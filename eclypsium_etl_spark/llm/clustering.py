@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .. import io
 from ..functions import dot, dot_sql
 from ..io import table
 from ..registry import query
@@ -243,6 +244,18 @@ def _lloyd(
     return assigned, centroids
 
 
+def kmeans_memo_keys(sf_dir, k: int, iterations: int) -> tuple[str, str]:
+    """(centroids, assignment) memo keys of the canonical model; the
+    assignment is derived from the centroids, so it names their key."""
+    ckey = io.memo_key(
+        "kmeans_cent_v1", sf_dir, "embeddings.parquet", params=(k, iterations)
+    )
+    akey = io.memo_key(
+        "kmeans_asg_v1", sf_dir, "embeddings.parquet", params=(ckey,)
+    )
+    return ckey, akey
+
+
 def _kmeans_fit_canonical(
     spark, sf_dir, k: int, iterations: int
 ) -> tuple[DataFrame, DataFrame]:
@@ -251,25 +264,12 @@ def _kmeans_fit_canonical(
     partitioned by cent_id" made real: without this, each of the
     half-dozen IVF-family queries re-runs the whole lazy Lloyd chain per
     DataFrame reference (trainings are the dominant cost of a walk
-    over the family). materialize_once keyed by sf + source stamp +
-    (k, iterations) + a version token (bump v1 if the Lloyd kernel
-    changes, else a stale memo would serve old assignments — the
-    differential walk fails loudly if so). float32 parquet round-trip is
-    exact, so the memoized model is bit-identical to the lazy one."""
-    import os
-    import tempfile
-
-    from ..io import materialize_once, source_stamp
-
-    slug = sf_dir.strip("/").replace("/", "_")
-    stamp = source_stamp(os.path.join(sf_dir, "embeddings.parquet"))
-    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-    ckey = os.path.join(
-        base, f"kmeans_cent_v1_k{k}_i{iterations}_{slug}_{stamp}"
-    )
-    akey = os.path.join(
-        base, f"kmeans_asg_v1_k{k}_i{iterations}_{slug}_{stamp}"
-    )
+    over the family). The ``v1`` token in the key is bumped when the
+    Lloyd kernel changes, else a stale memo would serve old assignments
+    (the differential walk fails loudly if so). float32 parquet
+    round-trip is exact, so the memoized model is bit-identical to the
+    lazy one."""
+    ckey, akey = kmeans_memo_keys(sf_dir, k, iterations)
 
     def embeddings() -> DataFrame:
         return table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -279,12 +279,12 @@ def _kmeans_fit_canonical(
         _, centroids = _lloyd(em, _first_k(em, k), iterations)
         centroids.write.parquet(path)
 
-    cents_m = materialize_once(spark, ckey, write_centroids)
+    cents_m = io.materialize_once(spark, io.scratch_path(ckey), write_centroids)
     # rebuild the assignment FROM the materialized centroids so the
     # training chain executes exactly once (for the cents write)
-    asg_m = materialize_once(
+    asg_m = io.materialize_once(
         spark,
-        akey,
+        io.scratch_path(akey),
         lambda p: assign_to_centroids(embeddings(), cents_m).write.parquet(p),
     )
     return asg_m, cents_m
@@ -335,11 +335,8 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
 
     pairs: (doc_a, doc_b) with doc_a < doc_b. Returns (doc_id, group_id)
     for every vertex that appears in at least one pair."""
-    import atexit
     import os
     import shutil
-    import tempfile
-    import uuid
 
     spark = pairs.sparkSession
     edges = pairs.select(
@@ -351,9 +348,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
         edges.select(F.col("src").alias("doc_id")).distinct()
         .withColumn("label", F.col("doc_id"))
     )
-    scratch = os.path.join(
-        tempfile.gettempdir(), "eclypsium_etl_spark", f"cc_{uuid.uuid4().hex[:12]}"
-    )
+    scratch = io.scratch_dir("cc")
     prev_step = None
     try:
         for it in range(max_iter):
@@ -403,10 +398,9 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
         # non-convergence) must not leak the cc_* scratch directories
         shutil.rmtree(scratch, ignore_errors=True)
         raise
-    # the final step's parquet stays on disk until process exit (same
-    # contract as shingles()); the caller gets a lazy distributed scan of
-    # it, never a driver-side materialization
-    atexit.register(shutil.rmtree, scratch, ignore_errors=True)
+    # the final step's parquet stays on disk until process exit
+    # (io.scratch_dir); the caller gets a lazy distributed scan of it,
+    # never a driver-side materialization
     return labels.select("doc_id", F.col("label").alias("group_id"))
 
 
@@ -435,11 +429,8 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 20) -> DataFrame
     is exhausted. Returns (doc_id, group_id) for every vertex in a pair;
     exact equivalence with the label-prop kernel (and thus q111's
     recursive-CTE oracle) is asserted in tests."""
-    import atexit
     import os
     import shutil
-    import tempfile
-    import uuid
 
     spark = pairs.sparkSession
     edges = (
@@ -447,9 +438,7 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 20) -> DataFrame
         .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .distinct()
     )
-    scratch = os.path.join(
-        tempfile.gettempdir(), "eclypsium_etl_spark", f"ccs_{uuid.uuid4().hex[:12]}"
-    )
+    scratch = io.scratch_dir("ccs")
     # every vertex that appears in a pair — the output domain (roots stay
     # in the edge set as targets only, so they're re-added at the end)
     vertices = (
@@ -514,7 +503,6 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 20) -> DataFrame
     except BaseException:
         shutil.rmtree(scratch, ignore_errors=True)
         raise
-    atexit.register(shutil.rmtree, scratch, ignore_errors=True)
     # converged stars point child -> root (child > root); roots map to
     # themselves via the left join's coalesce
     child_root = edges.select(
@@ -609,26 +597,17 @@ _SEM_CLUSTER_CAP = 4096  # max rows per GEMM sub-block; giants split
 def semdedup_assignments(spark, sf_dir: str) -> DataFrame:
     """The memoized (vec_id, embedding, cent_id) k-means assignment table
     q129 materializes before its three consumers (write-once parquet,
-    io.materialize_once, keyed on the embeddings source stamp).
-    Exposed as a helper so __spark_entry__'s warm-up can build it
-    before the driver's correctness walk reaches q129 — the same
-    pre-warm contract the shingle memo has."""
-    import os
-    import tempfile
-
-    from ..io import materialize_once, source_stamp
-
+    io.materialize_once). Exposed as a helper so __spark_entry__'s
+    warm-up can build it before the driver's correctness walk reaches
+    q129 — the same pre-warm contract the shingle memo has."""
     em = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cents = em.filter(F.col("vec_id") < _K).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_emb")
     )
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
-        f"semdedup_asg_{sf_dir.strip('/').replace('/', '_')}"
-        f"_{source_stamp(f'{sf_dir}/embeddings.parquet')}",
+    out = io.scratch_path(
+        io.memo_key("semdedup_asg", sf_dir, "embeddings.parquet", params=(_K,))
     )
-    return materialize_once(
+    return io.materialize_once(
         spark,
         out,
         lambda path: assign_to_centroids(em, cents).write.parquet(path),

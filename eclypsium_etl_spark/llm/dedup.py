@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .. import io
 from ..functions import dot, dot_sql
 from ..io import table, table_spread
 from ..registry import query
@@ -92,28 +93,13 @@ def shingles(spark, sf_dir) -> DataFrame:
     accumulate across invocations and thrash the session's memory, while a
     re-scanned parquet intermediate is cheap, shared, and rerun-safe —
     exactly the persisted intermediate table a cluster pipeline would use."""
-    import os
-    import tempfile
-
-    from ..io import materialize_once, source_stamp
-
     d = table(spark, sf_dir, "documents")
-    # path slug from the FULL sf_dir (two data dirs sharing a basename must
-    # not alias) + the source's mtime/size stamp (a regenerated fixture
-    # must not be served the previous fixture's shingles) + the layout
-    # width (ADVICE r12's memo-key rule: every constant that shapes the
-    # landed bytes belongs in the key — a session at a different core
-    # count must not be served a layout fanned for another width)
     width = spark.sparkContext.defaultParallelism
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
-        f"shingles_{sf_dir.strip('/').replace('/', '_')}"
-        f"_{source_stamp(f'{sf_dir}/documents.parquet')}_w{width}",
+    out = io.scratch_path(
+        io.memo_key("shingles", sf_dir, "documents.parquet", params=(width,))
     )
 
-    # memoized per sf_dir (cross-process write-once, io.materialize_once):
-    # q63/q71/q115 all consume this; without the memo each registry
+    # q63/q71/q115 all consume this memo; without it each registry
     # invocation re-ran the explode+distinct shuffle and parquet rewrite
     # (the dominant per-query harness cost for all three).
     # repartition to explicit core width before the (expensive) explode
@@ -133,7 +119,7 @@ def shingles(spark, sf_dir) -> DataFrame:
             .write.parquet(path)
         )
 
-    return materialize_once(spark, out, write)
+    return io.materialize_once(spark, out, write)
 
 
 def jaccard_pairs(

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .. import io
 from ..functions import dot, dot_sql
 from ..io import table
 from ..registry import query
@@ -1928,21 +1929,12 @@ def _q340_rotated(spark, sf_dir) -> DataFrame:
     the query projection — then reads a flat parquet scan instead of
     duplicating the rotation subtree into each unrolled Lloyd lineage,
     the q335 plan-blowup guard). v1 + the rotation name in the key."""
-    import os
-    import tempfile
-
-    from ..io import materialize_once, source_stamp
-
     em = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     rot = em.select("vec_id", F.expr(_ROT_EXPR_SPARK).alias("embedding"))
-    src_pq = os.path.join(sf_dir, "embeddings.parquet")
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
-        f"q340_rot_hadamard_v1_{sf_dir.strip('/').replace('/', '_')}"
-        f"_{source_stamp(src_pq)}",
+    out = io.scratch_path(
+        io.memo_key("q340_rot_hadamard_v1", sf_dir, "embeddings.parquet")
     )
-    return materialize_once(spark, out, lambda p: rot.write.parquet(p))
+    return io.materialize_once(spark, out, lambda p: rot.write.parquet(p))
 
 
 @query(
@@ -2340,15 +2332,10 @@ def _q335_resid(spark, sf_dir) -> DataFrame:
     """The materialized residual table (vec_id, embedding, cell,
     cell_emb, r_emb) shared by q335 and q337: coarse-assign, compute
     float32-narrowed residuals in the scan, persist via the
-    materialize_once memo (full-path slug + source stamp — the
-    shingles convention). Every consumer then reads a flat scan, which
-    is both the plan-blowup guard (see q335's docstring) and the
+    io.materialize_once memo. Every consumer then reads a flat scan,
+    which is both the plan-blowup guard (see q335's docstring) and the
     production IVFADC shape."""
-    import os
-    import tempfile
-
     from .clustering import kmeans_fit
-    from ..io import materialize_once, source_stamp
 
     asg, ccents = kmeans_fit(
         spark, sf_dir, k=_N_CENTROIDS, iterations=_IVF_ITERS
@@ -2373,21 +2360,19 @@ def _q335_resid(spark, sf_dir) -> DataFrame:
             ).alias("r_emb"),
         )
     )
-    src_pq = os.path.join(sf_dir, "embeddings.parquet")
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
-        # v1 + model knobs in the key, bumped in LOCKSTEP with the
-        # kmeans_cent_v1 memo it derives from: a kernel-version bump that
-        # refreshed the centroid memo but not this one would silently
-        # serve residuals computed from the OLD model (surfacing only as
-        # a differential hash failure instead of a rebuild).
-        f"q335_resid_v1_k{_N_CENTROIDS}_i{_IVF_ITERS}"
-        f"_{sf_dir.strip('/').replace('/', '_')}"
-        f"_{source_stamp(src_pq)}",
+    return io.materialize_once(
+        spark,
+        io.scratch_path(_q335_resid_key(sf_dir)),
+        lambda p: resid_lazy.write.parquet(p),
     )
-    return materialize_once(
-        spark, out, lambda p: resid_lazy.write.parquet(p)
+
+
+def _q335_resid_key(sf_dir) -> str:
+    from .clustering import kmeans_memo_keys
+
+    _, akey = kmeans_memo_keys(sf_dir, _N_CENTROIDS, _IVF_ITERS)
+    return io.memo_key(
+        "q335_resid_v1", sf_dir, "embeddings.parquet", params=(akey,)
     )
 
 
@@ -2753,11 +2738,7 @@ def q337_ivfpq_percell(spark, sf_dir) -> DataFrame:
     join; the corpus never shuffles. At 100 TB the per-cell training
     is embarrassingly parallel (cells are disjoint) and serving is
     identical to q335 with a (cell, code)-keyed decode map."""
-    import os
-    import tempfile
-
     from .clustering import kmeans_fit
-    from ..io import materialize_once, source_stamp
 
     resid = _q335_resid(spark, sf_dir)
     em = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -2797,13 +2778,15 @@ def q337_ivfpq_percell(spark, sf_dir) -> DataFrame:
             path
         )
 
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
-        f"q337_cbs_v1_{sf_dir.strip('/').replace('/', '_')}"
-        f"_{source_stamp(os.path.join(sf_dir, 'embeddings.parquet'))}",
+    out = io.scratch_path(
+        io.memo_key(
+            "q337_cbs_v1",
+            sf_dir,
+            "embeddings.parquet",
+            params=(_q335_resid_key(sf_dir),),
+        )
     )
-    cb_df = materialize_once(spark, out, build_codebooks)
+    cb_df = io.materialize_once(spark, out, build_codebooks)
     corpus = (
         resid.join(F.broadcast(cb_df), "cell")
         .select(
@@ -2968,21 +2951,15 @@ def _clustered_corpus_memo(spark, sf_dir) -> DataFrame:
     """materialize_once the derived corpus (the Lloyd chain over it
     re-references its source ~2^iters times — the q331/q335 plan-blowup
     class; a memoized parquet makes each re-reference a scan)."""
-    import os
-    import tempfile
-
-    from ..io import materialize_once, source_stamp
-
-    slug = sf_dir.strip("/").replace("/", "_")
-    stamp = source_stamp(os.path.join(sf_dir, "embeddings.parquet"))
-    key = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
-        f"clu_corpus_v1_{slug}_{stamp}",
+    return io.materialize_once(
+        spark,
+        io.scratch_path(_clu_corpus_key(sf_dir)),
+        lambda p: clustered_corpus(spark, sf_dir).write.parquet(p),
     )
-    return materialize_once(
-        spark, key, lambda p: clustered_corpus(spark, sf_dir).write.parquet(p)
-    )
+
+
+def _clu_corpus_key(sf_dir) -> str:
+    return io.memo_key("clu_corpus_v1", sf_dir, "embeddings.parquet")
 
 
 @query(
@@ -3091,27 +3068,21 @@ def q343_ivf_clustered(spark, sf_dir) -> DataFrame:
     )
     # memoize the trained model: the lazy Lloyd chain would otherwise
     # re-run per downstream reference (occupancy, candidates, top-k)
-    import os
-    import tempfile
-
-    from ..io import materialize_once, source_stamp
-
-    slug = sf_dir.strip("/").replace("/", "_")
-    stamp = source_stamp(os.path.join(sf_dir, "embeddings.parquet"))
-    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-    cents = materialize_once(
-        spark,
-        os.path.join(
-            base,
-            f"clu_ivf_cent_v1_k{_CLU_K}_i{_IVF_ITERS}_{slug}_{stamp}",
-        ),
-        lambda p: cents.write.parquet(p),
+    ckey = io.memo_key(
+        "clu_ivf_cent_v1",
+        sf_dir,
+        "embeddings.parquet",
+        params=(_CLU_K, _IVF_ITERS, _clu_corpus_key(sf_dir)),
     )
-    asg = materialize_once(
+    cents = io.materialize_once(
+        spark, io.scratch_path(ckey), lambda p: cents.write.parquet(p)
+    )
+    asg = io.materialize_once(
         spark,
-        os.path.join(
-            base,
-            f"clu_ivf_asg_v1_k{_CLU_K}_i{_IVF_ITERS}_{slug}_{stamp}",
+        io.scratch_path(
+            io.memo_key(
+                "clu_ivf_asg_v1", sf_dir, "embeddings.parquet", params=(ckey,)
+            )
         ),
         lambda p: assign_to_centroids(clu, cents).write.parquet(p),
     )

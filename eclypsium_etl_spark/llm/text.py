@@ -13,6 +13,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from .. import io
 from ..functions import davg, davg_sql
 from ..io import table, table_spread
 from ..registry import ORACLE, query
@@ -4375,17 +4376,11 @@ def _rrf_sparse_index(spark, sf_dir) -> DataFrame:
     bounded shards, so no per-token partition is unsplittable at
     100 TB. Shard reassembly is LOSSLESS for scoring: the BM25 join
     keys on token alone, and the shard column only shapes layout."""
-    import os
-    import tempfile
-
-    from ..io import materialize_once, source_stamp
-
     d = table(spark, sf_dir, "documents")
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
-        f"rrfidx_{sf_dir.strip('/').replace('/', '_')}"
-        f"_{source_stamp(f'{sf_dir}/documents.parquet')}",
+    # the keyed repartitions fan out to the session's shuffle width
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    out = io.scratch_path(
+        io.memo_key("rrfidx", sf_dir, "documents.parquet", params=(width,))
     )
 
     def write(path: str) -> None:
@@ -4417,7 +4412,7 @@ def _rrf_sparse_index(spark, sf_dir) -> DataFrame:
             .write.parquet(path)
         )
 
-    return materialize_once(
+    return io.materialize_once(
         spark,
         out,
         write,
@@ -4431,18 +4426,9 @@ def _rrf_dense_index(spark, sf_dir) -> DataFrame:
     signed-safe 32-bit halves) NEXT TO the float embedding, so the
     Hamming screen reads 8 bytes/vector and column pruning fetches the
     floats only for the rerank set."""
-    import os
-    import tempfile
-
-    from ..io import materialize_once, source_stamp
     from .similarity import _bq_pack_expr
 
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
-        f"bqidx_{sf_dir.strip('/').replace('/', '_')}"
-        f"_{source_stamp(f'{sf_dir}/embeddings.parquet')}",
-    )
+    out = io.scratch_path(io.memo_key("bqidx", sf_dir, "embeddings.parquet"))
 
     def write(path: str) -> None:
         table(spark, sf_dir, "embeddings").select(
@@ -4452,7 +4438,7 @@ def _rrf_dense_index(spark, sf_dir) -> DataFrame:
             "embedding",
         ).write.parquet(path)
 
-    return materialize_once(
+    return io.materialize_once(
         spark,
         out,
         write,
@@ -5070,30 +5056,19 @@ def _rag_chain(
 def _rag_chunk_index(spark, sf_dir) -> DataFrame:
     """q361's landed chunk posting index — the q344 tf-bearing posting
     shape at chunk granularity, written ONCE per fixture generation
-    (io.materialize_once, keyed on the documents parquet's source
-    stamp) and read back as the sparse side's only input. Postings
-    carry (token, shard, doc_id, chunk_id, tf); the shard column is
-    the bounded token-hash layout q344's hot-shard adaptivity starts
-    from, so a cluster deployment can bucket/cluster the landed table
-    by it. Build cost amortizes across every query thereafter — the
+    (io.materialize_once) and read back as the sparse side's only
+    input. Postings carry (token, shard, doc_id, chunk_id, tf); the
+    shard column is the bounded token-hash layout q344's hot-shard
+    adaptivity starts from, so a cluster deployment can bucket/cluster
+    the landed table by it. Build cost amortizes across every query thereafter — the
     100 TB retrieval economics q352 documents."""
-    import os
-    import tempfile
-
-    from ..io import materialize_once, source_stamp
-
-    # Memo key folds in the chunker constants and a posting-layout
-    # version token alongside the source stamp (ADVICE r12): a later
-    # change to _CAP_S/_CAP_W or the posting columns on a machine with
-    # an unchanged fixture must MISS the memo, not serve a stale index.
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
-        f"q361idx_v1_w{_CAP_W}s{_CAP_S}"
-        f"_{sf_dir.strip('/').replace('/', '_')}"
-        f"_{source_stamp(f'{sf_dir}/documents.parquet')}",
+    # params: the chunker constants and the shuffle width the keyed
+    # repartition fans out to; v1 versions the posting columns
+    params = (_CAP_W, _CAP_S, spark.conf.get("spark.sql.shuffle.partitions"))
+    out = io.scratch_path(
+        io.memo_key("q361idx_v1", sf_dir, "documents.parquet", params=params)
     )
-    return materialize_once(
+    return io.materialize_once(
         spark,
         out,
         lambda path: _rag_chunk_tf(spark, sf_dir)
@@ -5203,20 +5178,14 @@ def q366_rag_index_cdc(spark, sf_dir) -> DataFrame:
     drop+overwrite one atomic commit. The reference's daily full
     re-extract (mercadolibre_pipeline_dag.py:65) is the degenerate
     form: every partition affected, every day."""
-    import os
     import shutil
-    import tempfile
-
-    from ..io import fixture_suffix
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
 
     # managed posting table, seeded with the ORIGINAL corpus
-    suf = fixture_suffix(sf_dir)
-    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-    os.makedirs(base, exist_ok=True)
+    suf = io.fixture_suffix(sf_dir)
     tpost = f"t_q366_post_{suf}"
-    loc = os.path.join(base, f"{tpost}_tbl")
+    loc = io.scratch_path(f"{tpost}_tbl")
     shutil.rmtree(loc, ignore_errors=True)
     spark.sql(f"DROP TABLE IF EXISTS {tpost}")
     spark.sql(
@@ -5275,9 +5244,6 @@ def _cow_overwrite_shards(
     affected partitions the replacement no longer contains (dynamic
     overwrite cannot empty a partition). Shared by the CDC revision
     (q366) and compliance-purge (q368) merge paths."""
-    import shutil
-    import tempfile
-
     import os
     import shutil
     import tempfile
@@ -5490,19 +5456,13 @@ def q368_rag_index_purge(spark, sf_dir) -> DataFrame:
     and, for parquet-level hard deletion, compaction of the rewritten
     files IS the erasure (q235's pass). The anti-join keys on the
     takedown manifest, which is broadcast-sized by construction."""
-    import os
     import shutil
-    import tempfile
-
-    from ..io import fixture_suffix
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    suf = fixture_suffix(sf_dir)
-    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-    os.makedirs(base, exist_ok=True)
+    suf = io.fixture_suffix(sf_dir)
     tpost = f"t_q368_post_{suf}"
-    loc = os.path.join(base, f"{tpost}_tbl")
+    loc = io.scratch_path(f"{tpost}_tbl")
     shutil.rmtree(loc, ignore_errors=True)
     spark.sql(f"DROP TABLE IF EXISTS {tpost}")
     spark.sql(

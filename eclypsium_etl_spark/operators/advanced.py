@@ -9,13 +9,11 @@ today" with the shapes any real warehouse workload adds on day two.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, functions as F
 
+from .. import io
 from ..functions import dsum, dsum_sql
-from ..io import materialize_once, table
+from ..io import table
 from ..registry import query
 
 
@@ -210,28 +208,16 @@ def q85_window_dedup(spark, sf_dir) -> DataFrame:
     ).select("event_id", "user_id", "ts", "event_type")
 
 
-def partitioned_orders_path(sf_dir: str) -> str:
-    """Scratch path of the partitionBy(o_orderstatus) orders layout:
-    full-path slug (same-basename data dirs must not alias) + source
-    mtime/size stamp (regenerated fixtures must not hit a stale layout)."""
-    from ..io import source_stamp
-
-    return os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
-        f"orders_partitioned_{sf_dir.strip('/').replace('/', '_')}"
-        f"_{source_stamp(f'{sf_dir}/orders.parquet')}",
-    )
-
-
 def partitioned_orders(spark, sf_dir) -> DataFrame:
     """orders laid out partitionBy(o_orderstatus) in the shared scratch
     area — the write-once intermediate behind q86 and q217, also pre-warmed
     by __spark_entry__.entry() so the harness's q86 run is scan-only."""
     src = table(spark, sf_dir, "orders")
-    return materialize_once(
+    return io.materialize_once(
         spark,
-        partitioned_orders_path(sf_dir),
+        io.scratch_path(
+            io.memo_key("orders_partitioned", sf_dir, "orders.parquet")
+        ),
         lambda path: src.write.partitionBy("o_orderstatus").parquet(path),
         # explicit read schema: an EMPTY orders slice writes no files and
         # no partition dirs, and an inferring read would fail
@@ -265,10 +251,10 @@ def q86_partition_pruning(spark, sf_dir) -> DataFrame:
 
 
 # process-level memo: bucketed catalog tables registered this session,
-# keyed by catalog name. The WAREHOUSE dir is cross-process (write-once,
+# keyed by catalog names. The WAREHOUSE dir is cross-process (write-once,
 # io.ensure_bucketed's atomic-rename + _SUCCESS protocol) but the
 # in-memory catalog is not, so each process registers once.
-_BUCKETED_BUILT: set[str] = set()
+_BUCKETED_BUILT: set[tuple[str, str]] = set()
 
 
 def bucketed_orders_customer(spark, sf_dir) -> tuple[str, str]:
@@ -279,23 +265,20 @@ def bucketed_orders_customer(spark, sf_dir) -> tuple[str, str]:
     once ACROSS processes (ensure_bucketed; concurrent walks previously
     raced write_bucketed's overwrite-in-place and one read a doubled
     table)."""
-    from ..io import ensure_bucketed, source_stamp
-
-    stamp = source_stamp(f"{sf_dir}/orders.parquet").replace("-", "_")
-    slug = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    ot, ct = f"orders_bkt_{slug}_{stamp}", f"customer_bkt_{slug}_{stamp}"
-    if ot not in _BUCKETED_BUILT:
-        ensure_bucketed(
+    ot = io.memo_key("orders_bkt", sf_dir, "orders.parquet")
+    ct = io.memo_key("customer_bkt", sf_dir, "customer.parquet")
+    if (ot, ct) not in _BUCKETED_BUILT:
+        io.ensure_bucketed(
             table(spark, sf_dir, "orders"), ot, "o_custkey", 8,
             sort_col="o_custkey",
         )
-        ensure_bucketed(
+        io.ensure_bucketed(
             table(spark, sf_dir, "customer").withColumnRenamed(
                 "c_custkey", "o_custkey"
             ),
             ct, "o_custkey", 8, sort_col="o_custkey",
         )
-        _BUCKETED_BUILT.add(ot)
+        _BUCKETED_BUILT.add((ot, ct))
     return ot, ct
 
 

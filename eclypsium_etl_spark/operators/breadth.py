@@ -10,9 +10,8 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..io import table
+from ..io import scratch_path, table
 from ..registry import query
-from .sources import _tmpdir
 
 
 @query(
@@ -689,7 +688,7 @@ def q270_fixed_width_source(spark, sf_dir) -> DataFrame:
     one null field, silently dropping the row). Inherent format
     limitation, documented: an empty STRING field is indistinguishable
     from NULL after the round-trip."""
-    out = _tmpdir(f"q270_fw_{os.path.basename(sf_dir)}")
+    out = scratch_path(f"q270_fw_{os.path.basename(sf_dir)}")
     o = table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 20 == 0)
 
     def fw(col, width):
@@ -775,7 +774,7 @@ def q272_json_permissive(spark, sf_dir) -> DataFrame:
     string from the source table. doc_id survives on corrupt rows only
     because the harness re-derives it from the captured raw string —
     real pipelines key the dead-letter table the same way."""
-    out = _tmpdir(f"q272_pjson_{os.path.basename(sf_dir)}")
+    out = scratch_path(f"q272_pjson_{os.path.basename(sf_dir)}")
     d = table(spark, sf_dir, "documents")
     line = F.when(
         F.col("doc_id") % 7 == 0,

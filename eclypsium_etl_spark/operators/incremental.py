@@ -16,7 +16,7 @@ import tempfile
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import dsum, dsum_sql
-from ..io import table
+from ..io import scratch_path, table
 from ..registry import query
 
 
@@ -523,9 +523,7 @@ def _scd2_create_init(spark, sf_dir, tname: str) -> None:
     every call rebuilds deterministically."""
     import shutil
 
-    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-    os.makedirs(base, exist_ok=True)
-    loc = os.path.join(base, f"{tname}_tbl_{os.path.basename(sf_dir)}")
+    loc = scratch_path(f"{tname}_tbl_{os.path.basename(sf_dir)}")
     shutil.rmtree(loc, ignore_errors=True)
     spark.sql(f"DROP TABLE IF EXISTS {tname}")
     spark.sql(
@@ -589,11 +587,7 @@ def _scd2_build_wave1(spark, sf_dir, tname: str) -> str:
         attr="seg",
         eff_date=F.to_date(F.lit(_SCD2_EFF_DATE)),
     )
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
-        f"{tname}_stage_{os.path.basename(sf_dir)}",
-    )
+    stage = scratch_path(f"{tname}_stage_{os.path.basename(sf_dir)}")
     _scd2_publish(spark, tname, stage, merged)
     return tname
 
@@ -690,11 +684,7 @@ def q324_scd2_multiwave(spark, sf_dir) -> DataFrame:
         attr="seg",
         eff_date=F.to_date(F.lit(_SCD2_W2_DATE)),
     )
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
-        f"{tname}_stage2_{os.path.basename(sf_dir)}",
-    )
+    stage = scratch_path(f"{tname}_stage2_{os.path.basename(sf_dir)}")
     _scd2_publish(spark, tname, stage, merged2)
     return _scd2_final_view(spark, tname)
 
@@ -786,11 +776,7 @@ def q326_scd2_tombstone(spark, sf_dir) -> DataFrame:
         key="k",
         eff_date=F.to_date(F.lit(_SCD2_W2_DATE)),
     )
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
-        f"{tname}_stage2_{os.path.basename(sf_dir)}",
-    )
+    stage = scratch_path(f"{tname}_stage2_{os.path.basename(sf_dir)}")
     _scd2_publish(spark, tname, stage, tombstoned)
     return _scd2_final_view(spark, tname)
 
@@ -878,8 +864,6 @@ def scd2_wave_handler(spark, tname: str, tag: str):
     guard never fires because it only evaluates on CHANGED rows).
     Pin-tested in tests/test_streaming.py (commit-log deletion replay)."""
 
-    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-
     def apply_wave(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
@@ -892,9 +876,7 @@ def scd2_wave_handler(spark, tname: str, tag: str):
                 attr="seg",
                 eff_date=F.to_date(F.lit(eff)),
             )
-            stage = os.path.join(
-                base, f"{tname}_stage_b{batch_id}_{eff}_{tag}"
-            )
+            stage = scratch_path(f"{tname}_stage_b{batch_id}_{eff}_{tag}")
             _scd2_publish(spark, tname, stage, merged)
 
     return apply_wave
@@ -1069,9 +1051,7 @@ def q333_scd2_multiattr(spark, sf_dir) -> DataFrame:
     import shutil
 
     tname = "t_q333"
-    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-    os.makedirs(base, exist_ok=True)
-    loc = os.path.join(base, f"{tname}_tbl_{os.path.basename(sf_dir)}")
+    loc = scratch_path(f"{tname}_tbl_{os.path.basename(sf_dir)}")
     shutil.rmtree(loc, ignore_errors=True)
     spark.sql(f"DROP TABLE IF EXISTS {tname}")
     spark.sql(
@@ -1128,7 +1108,7 @@ def q333_scd2_multiattr(spark, sf_dir) -> DataFrame:
         attrs=["seg", "nat"],
         eff_date=F.to_date(F.lit(_SCD2_EFF_DATE)),
     )
-    stage = os.path.join(base, f"{tname}_stage_{os.path.basename(sf_dir)}")
+    stage = scratch_path(f"{tname}_stage_{os.path.basename(sf_dir)}")
     _scd2_publish(spark, tname, stage, merged)
     return spark.table(tname).select(
         "k",
@@ -1241,9 +1221,7 @@ def q336_scd2_hashdiff(spark, sf_dir) -> DataFrame:
     import shutil
 
     tname = "t_q336"
-    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-    os.makedirs(base, exist_ok=True)
-    loc = os.path.join(base, f"{tname}_tbl_{os.path.basename(sf_dir)}")
+    loc = scratch_path(f"{tname}_tbl_{os.path.basename(sf_dir)}")
     shutil.rmtree(loc, ignore_errors=True)
     spark.sql(f"DROP TABLE IF EXISTS {tname}")
     spark.sql(
@@ -1300,7 +1278,7 @@ def q336_scd2_hashdiff(spark, sf_dir) -> DataFrame:
         eff_date=F.to_date(F.lit(_SCD2_EFF_DATE)),
         payload=["seg", "nat"],
     )
-    stage = os.path.join(base, f"{tname}_stage_{os.path.basename(sf_dir)}")
+    stage = scratch_path(f"{tname}_stage_{os.path.basename(sf_dir)}")
     _scd2_publish(spark, tname, stage, merged)
     return spark.table(tname).select(
         "k",
@@ -1565,11 +1543,7 @@ def q338_scd2_retro(spark, sf_dir) -> DataFrame:
         attr="seg",
         eff_date=F.to_date(F.lit(_SCD2_RETRO_DATE)),
     )
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
-        f"{tname}_retro_stage_{os.path.basename(sf_dir)}",
-    )
+    stage = scratch_path(f"{tname}_retro_stage_{os.path.basename(sf_dir)}")
     _scd2_publish(spark, tname, stage, merged)
     return _scd2_final_view(spark, tname)
 

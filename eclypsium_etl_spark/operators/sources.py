@@ -18,31 +18,13 @@ Reference behavior re-expressed Spark-first:
 from __future__ import annotations
 
 import os
-import tempfile
 from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..io import sink_overwrite, table
+from ..io import build_once, memo_key, scratch_path, sink_overwrite, table
 from ..registry import query
 from ..schemas import EVENT_PROPS
-
-
-def _tmpdir(name: str) -> str:
-    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-    os.makedirs(base, exist_ok=True)
-    return os.path.join(base, name)
-
-
-def _staging_key(sf_dir: str, source: str = "documents.parquet") -> str:
-    """Staging-dir key for write-once file fixtures: full-path slug (two
-    data dirs sharing a basename must not alias) + mtime/size stamp of the
-    source table (a regenerated fixture must never be served stale staged
-    files) — the same discipline as advanced.partitioned_orders_path."""
-    from ..io import source_stamp
-
-    slug = sf_dir.strip("/").replace("/", "_")
-    return f"{slug}_{source_stamp(os.path.join(sf_dir, source))}"
 
 
 @query(
@@ -102,7 +84,7 @@ def q04_sink_overwrite(spark, sf_dir) -> DataFrame:
     """Idempotent full-replace sink, verified by re-read: write the filtered
     orders to Parquet with mode("overwrite") twice (rerun-safety, the
     reference's contract), then scan the result back."""
-    out = _tmpdir("q04_sink")
+    out = scratch_path("q04_sink")
     df = (
         table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")
@@ -139,9 +121,9 @@ def q05_sink_jdbc(spark, sf_dir) -> DataFrame:
     from ..io import read_jdbc, write_jdbc
 
     spark._jvm.java.lang.System.setProperty(
-        "derby.system.home", _tmpdir("derby_home")
+        "derby.system.home", scratch_path("derby_home")
     )
-    db = _tmpdir(f"q05_derby_{os.path.basename(sf_dir)}")
+    db = scratch_path(f"q05_derby_{os.path.basename(sf_dir)}")
     url = f"jdbc:derby:{db};create=true"
     df = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal", "c_mktsegment"
@@ -175,7 +157,7 @@ def q93_source_csv(spark, sf_dir) -> DataFrame:
     type drift across files)."""
     from ..schemas import NATION
 
-    out = _tmpdir(f"q93_csv_{os.path.basename(sf_dir)}")
+    out = scratch_path(f"q93_csv_{os.path.basename(sf_dir)}")
     n = table(spark, sf_dir, "nation")
     n.write.mode("overwrite").option("header", True).csv(out)
     return spark.read.schema(NATION).option("header", True).csv(out)
@@ -190,7 +172,7 @@ def q93_source_csv(spark, sf_dir) -> DataFrame:
 def q94_source_orc(spark, sf_dir) -> DataFrame:
     """ORC source/sink round-trip — second columnar format, same pushdown
     and pruning machinery as Parquet."""
-    out = _tmpdir(f"q94_orc_{os.path.basename(sf_dir)}")
+    out = scratch_path(f"q94_orc_{os.path.basename(sf_dir)}")
     p = table(spark, sf_dir, "part").select(
         "p_partkey", "p_name", "p_brand", "p_retailprice"
     )
@@ -252,7 +234,7 @@ def q148_schema_evolution(spark, sf_dir) -> DataFrame:
     you pin the schema explicitly instead); column pruning and pushdown
     still reach each file with its own physical schema. The oracle states
     the expected union semantics directly over the source table."""
-    out = _tmpdir(f"q148_evo_{os.path.basename(sf_dir)}")
+    out = scratch_path(f"q148_evo_{os.path.basename(sf_dir)}")
     o = table(spark, sf_dir, "orders")
     v1 = o.filter(F.col("o_orderkey") % 2 == 0).select("o_orderkey", "o_totalprice")
     v2 = o.filter(F.col("o_orderkey") % 2 == 1).select(
@@ -285,7 +267,7 @@ def q155_sink_dynamic_partition(spark, sf_dir) -> DataFrame:
     the expected post-rewrite state. partitionBy(source) also gives
     source-pruned scans to every downstream per-source operator (q149,
     q154, q122)."""
-    out = _tmpdir(f"q155_dpo_{os.path.basename(sf_dir)}")
+    out = scratch_path(f"q155_dpo_{os.path.basename(sf_dir)}")
     d = table(spark, sf_dir, "documents")
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -324,7 +306,7 @@ def q164_source_text(spark, sf_dir) -> DataFrame:
     exact. (Line-oriented formats require the no-embedded-newline
     invariant the fixture satisfies; real crawl pipelines escape or
     length-prefix instead.)"""
-    out = _tmpdir(f"q164_text_{os.path.basename(sf_dir)}")
+    out = scratch_path(f"q164_text_{os.path.basename(sf_dir)}")
     d = table(spark, sf_dir, "documents")
     d.select("text").write.mode("overwrite").text(out)
     return spark.read.text(out).select(
@@ -349,7 +331,7 @@ def q167_source_xml(spark, sf_dir) -> DataFrame:
     deliver."""
     from ..schemas import NATION
 
-    out = _tmpdir(f"q167_xml_{os.path.basename(sf_dir)}")
+    out = scratch_path(f"q167_xml_{os.path.basename(sf_dir)}")
     n = table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -388,7 +370,7 @@ def q190_sink_jsonl(spark, sf_dir) -> DataFrame:
     schema-on-read is mandatory and numbers would otherwise widen or
     re-infer per file. Round-trip equality IS the check: text survives
     JSON escaping byte-exact."""
-    out = _tmpdir(f"q190_jsonl_{os.path.basename(sf_dir)}")
+    out = scratch_path(f"q190_jsonl_{os.path.basename(sf_dir)}")
     d = table(spark, sf_dir, "documents")
     d.write.mode("overwrite").partitionBy("source").json(out)
     schema = T.StructType(
@@ -516,7 +498,7 @@ def q234_csv_permissive(spark, sf_dir) -> DataFrame:
     dead-letter path) is the q58 foreachBatch pattern."""
     import shutil
 
-    out = _tmpdir(f"q234_csv_{os.path.basename(sf_dir)}")
+    out = scratch_path(f"q234_csv_{os.path.basename(sf_dir)}")
     shutil.rmtree(out, ignore_errors=True)
     n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
     n.write.mode("overwrite").csv(out)
@@ -570,8 +552,8 @@ def q235_compact_small_files(spark, sf_dir) -> DataFrame:
     count actually collapses."""
     import shutil
 
-    frag = _tmpdir(f"q235_frag_{os.path.basename(sf_dir)}")
-    out = _tmpdir(f"q235_compact_{os.path.basename(sf_dir)}")
+    frag = scratch_path(f"q235_frag_{os.path.basename(sf_dir)}")
+    out = scratch_path(f"q235_compact_{os.path.basename(sf_dir)}")
     cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"]
     o = table(spark, sf_dir, "orders").select(*cols)
     o.repartition(64).write.mode("overwrite").parquet(frag)
@@ -622,7 +604,7 @@ def q244_ddl_defaults(spark, sf_dir) -> DataFrame:
     rerun-safety hazards this query must own, not inherit."""
     import shutil
 
-    loc = _tmpdir(f"q244_tbl_{os.path.basename(sf_dir)}")
+    loc = scratch_path(f"q244_tbl_{os.path.basename(sf_dir)}")
     shutil.rmtree(loc, ignore_errors=True)
     table(spark, sf_dir, "nation").createOrReplaceTempView("nation_q244")
     spark.sql("DROP TABLE IF EXISTS t_q244")
@@ -733,7 +715,7 @@ def q251_gzip_jsonl_source(spark, sf_dir) -> DataFrame:
     independently-parallel .gz parts), which is the operational fix:
     many medium gzip shards, never one giant one; re-compress to a
     splittable layout (parquet+zstd, q235) on first touch."""
-    out = _tmpdir(f"q251_gz_{os.path.basename(sf_dir)}")
+    out = scratch_path(f"q251_gz_{os.path.basename(sf_dir)}")
     d = table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     (
         d.repartition(4)
@@ -767,19 +749,17 @@ def q252_binary_file_source(spark, sf_dir) -> DataFrame:
     small assets (tar/parquet) before reading at 100 TB, or the file
     listing itself becomes the bottleneck; maxPartitionBytes still
     groups small files per task."""
-    import shutil
+    out = scratch_path(memo_key("q252_files", sf_dir, "documents.parquet"))
 
-    out = _tmpdir(f"q252_files_{_staging_key(sf_dir)}")
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        shutil.rmtree(out, ignore_errors=True)
-        os.makedirs(out, exist_ok=True)
+    def stage(path: str) -> None:
+        os.makedirs(path)
         for r in (
             table(spark, sf_dir, "documents").select("doc_id", "text").collect()
         ):
-            with open(os.path.join(out, f"doc_{r.doc_id}.txt"), "wb") as f:
+            with open(os.path.join(path, f"doc_{r.doc_id}.txt"), "wb") as f:
                 f.write(r.text.encode("utf-8"))
-        open(marker, "w").close()
+
+    build_once(out, stage)
     return (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.txt")
@@ -840,14 +820,12 @@ def q253_tar_packed_assets(spark, sf_dir) -> DataFrame:
     is stdlib tarfile; at 100 TB the shards are written once by the
     packing job and every epoch reads them sequentially."""
     import io
-    import shutil
     import tarfile
 
-    out = _tmpdir(f"q253_tars_{_staging_key(sf_dir)}")
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        shutil.rmtree(out, ignore_errors=True)
-        os.makedirs(out, exist_ok=True)
+    out = scratch_path(memo_key("q253_tars", sf_dir, "documents.parquet"))
+
+    def stage(path: str) -> None:
+        os.makedirs(path)
         rows = (
             table(spark, sf_dir, "documents").select("doc_id", "text").collect()
         )
@@ -861,9 +839,10 @@ def q253_tar_packed_assets(spark, sf_dir) -> DataFrame:
             tars[r.doc_id % n_shards].addfile(info, io.BytesIO(data))
         for i, (t, b) in enumerate(zip(tars, shards)):
             t.close()
-            with open(os.path.join(out, f"shard_{i:02d}.tar"), "wb") as f:
+            with open(os.path.join(path, f"shard_{i:02d}.tar"), "wb") as f:
                 f.write(b.getvalue())
-        open(marker, "w").close()
+
+    build_once(out, stage)
     shard_rows = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.tar")
@@ -898,7 +877,7 @@ def q254_multiline_json(spark, sf_dir) -> DataFrame:
     import json
     import shutil
 
-    out = _tmpdir(f"q254_mljson_{os.path.basename(sf_dir)}")
+    out = scratch_path(f"q254_mljson_{os.path.basename(sf_dir)}")
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out, exist_ok=True)
     rows = [
@@ -934,7 +913,7 @@ def q255_csv_quoting(spark, sf_dir) -> DataFrame:
     the source column by the SAME expression the oracle uses, so the
     round trip is verified byte-for-byte; a parser that mangles any of
     the three hazards changes the hash."""
-    out = _tmpdir(f"q255_csvq_{os.path.basename(sf_dir)}")
+    out = scratch_path(f"q255_csvq_{os.path.basename(sf_dir)}")
     gnarly = F.concat(
         F.col("n_name"),
         F.lit(', officially "'),
@@ -1002,17 +981,14 @@ def q291_zip_packed_assets(spark, sf_dir) -> DataFrame:
     note DuckDB strlen() is itself byte-based (ADVICE r6), the idiom
     exists so the unit can't be misread, and the truly char-based
     length() stays linted out of byte aliases). Shards are staged
-    write-once under the full-path + source-stamp key (the q252
-    staleness discipline)."""
+    write-once (io.build_once), like q252's files."""
     import io
-    import shutil
     import zipfile
 
-    out = _tmpdir(f"q291_zips_{_staging_key(sf_dir)}")
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        shutil.rmtree(out, ignore_errors=True)
-        os.makedirs(out, exist_ok=True)
+    out = scratch_path(memo_key("q291_zips", sf_dir, "documents.parquet"))
+
+    def stage(path: str) -> None:
+        os.makedirs(path)
         rows = (
             table(spark, sf_dir, "documents").select("doc_id", "text").collect()
         )
@@ -1028,9 +1004,10 @@ def q291_zip_packed_assets(spark, sf_dir) -> DataFrame:
             )
         for i, (z, b) in enumerate(zip(zips, bufs)):
             z.close()
-            with open(os.path.join(out, f"shard_{i:02d}.zip"), "wb") as f:
+            with open(os.path.join(path, f"shard_{i:02d}.zip"), "wb") as f:
                 f.write(b.getvalue())
-        open(marker, "w").close()
+
+    build_once(out, stage)
     shard_rows = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.zip")

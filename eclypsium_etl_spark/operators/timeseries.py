@@ -12,6 +12,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .. import io
 from ..functions import dsum, dsum_sql, dsum_str, dsum_str_sql
 from ..io import table
 from ..registry import query
@@ -154,28 +155,21 @@ def q90_stats_agg(spark, sf_dir) -> DataFrame:
     sf0.1: ~3.5s (two full-width scans, r10) -> ~1.1s (fanned memo) —
     the dominant cost was never the scan but the decimal stages running
     on the source parquet's 2 row-group-limited tasks."""
-    import os
-    import tempfile
-
-    from ..io import materialize_once, source_stamp
-
-    proj = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
-        f"q90proj_{sf_dir.strip('/').replace('/', '_')}"
-        f"_{source_stamp(f'{sf_dir}/lineitem.parquet')}",
+    width = spark.sparkContext.defaultParallelism
+    proj = io.scratch_path(
+        io.memo_key("q90proj", sf_dir, "lineitem.parquet", params=(width,))
     )
     # repartition to core width BEFORE landing: the source parquet is
     # 1-2 row groups, so an unfanned memo caps the decimal-sum stages at
     # 2 tasks on a 32-core box — measured 3.9s -> 1.1s at sf0.1 from
     # this line alone. Order cannot affect the result: every aggregate
     # downstream is a decimal-exact (order-independent) sum.
-    li = materialize_once(
+    li = io.materialize_once(
         spark,
         proj,
         lambda path: table(spark, sf_dir, "lineitem")
         .select("l_returnflag", "l_quantity", "l_extendedprice")
-        .repartition(spark.sparkContext.defaultParallelism)
+        .repartition(width)
         .write.parquet(path),
     )
     piv = li.groupBy(F.col("l_returnflag").alias("rf")).agg(
@@ -970,12 +964,6 @@ def q358_gap_audit_ranged(spark, sf_dir) -> DataFrame:
     At 100 TB the corpus never converges on one task: the only
     movement is the range shuffle, and the fixup is num_partitions
     rows."""
-    import atexit
-    import os as _os
-    import shutil
-    import tempfile as _tempfile
-    import uuid
-
     ids = (
         table(spark, sf_dir, "events")
         .filter(F.col("event_id") % 97 != 0)
@@ -985,14 +973,7 @@ def q358_gap_audit_ranged(spark, sf_dir) -> DataFrame:
     staged = ids.repartitionByRange(parts, F.col("event_id")).withColumn(
         "__pid", F.spark_partition_id()
     )
-    scratch = _os.path.join(
-        _tempfile.gettempdir(),
-        "eclypsium_etl_spark",
-        f"gaps_{uuid.uuid4().hex[:12]}",
-    )
-    staged.write.parquet(scratch)
-    atexit.register(shutil.rmtree, scratch, ignore_errors=True)
-    local = spark.read.parquet(scratch)
+    local = io.pin(staged, "gaps")
     w = Window.partitionBy("__pid").orderBy("event_id")
     g = local.withColumn("next_local", F.lead("event_id").over(w))
     heads = sorted(

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from . import io
+
 
 def asof_join(
     left: DataFrame,
@@ -199,26 +201,18 @@ def global_running_sum(
     them map-side. The only driver-side data is num_partitions rows — the
     corpus itself never leaves executors.
 
-    The per-partition stage is pinned to a disk temp-parquet before the
-    totals are read: range-boundary sampling is recomputed per job, so
-    without pinning, the totals job and the final job could disagree on
-    partition membership and mis-base every row. Disk, not
-    localCheckpoint — checkpoint blocks accumulate across invocations and
-    thrash the session (the engine's standard fixpoint discipline, see
-    llm/dedup.py shingles()); ``__pid`` is a stored COLUMN, so the
-    re-read's own partitioning is irrelevant to correctness.
+    The per-partition stage is pinned (io.pin) before the totals are
+    read: range-boundary sampling is recomputed per job, so without
+    pinning, the totals job and the final job could disagree on
+    partition membership and mis-base every row. ``__pid`` is a stored
+    COLUMN, so the re-read's own partitioning is irrelevant to
+    correctness.
 
     Takes an INTEGER value column (the base offsets are typed long):
     integer sums are exact and reproduce the single-window result
     bit-for-bit (asserted in tests); for floats, cast to decimal and
     scale to integer units first — the same discipline as everywhere
     else in this engine."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     reserved = {"__pid", "__run", "__base", "__base_cnt"}
     if out_col in reserved or reserved & set(df.columns):
         raise ValueError(
@@ -244,12 +238,7 @@ def global_running_sum(
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    scratch = os.path.join(
-        tempfile.gettempdir(), "eclypsium_etl_spark", f"prefix_{uuid.uuid4().hex[:12]}"
-    )
-    staged.withColumn("__run", F.sum(value_col).over(w)).write.parquet(scratch)
-    atexit.register(shutil.rmtree, scratch, ignore_errors=True)
-    local = spark.read.parquet(scratch)
+    local = io.pin(staged.withColumn("__run", F.sum(value_col).over(w)), "prefix")
     totals = local.groupBy("__pid").agg(
         F.sum(value_col).alias("__tot"),
         F.count(value_col).alias("__cnt"),
@@ -318,12 +307,7 @@ def global_running_max(
     partition, matching what a single unpartitioned window would
     produce (ADVICE r12 — Python's ``nan > x`` is always False, which
     would otherwise silently drop the NaN from the prefix)."""
-    import atexit
     import math
-    import os
-    import shutil
-    import tempfile
-    import uuid
 
     reserved = {"__pid", "__run", "__base"}
     if out_col in reserved or reserved & set(df.columns):
@@ -340,12 +324,7 @@ def global_running_max(
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    scratch = os.path.join(
-        tempfile.gettempdir(), "eclypsium_etl_spark", f"runmax_{uuid.uuid4().hex[:12]}"
-    )
-    staged.withColumn("__run", F.max(value_col).over(w)).write.parquet(scratch)
-    atexit.register(shutil.rmtree, scratch, ignore_errors=True)
-    local = spark.read.parquet(scratch)
+    local = io.pin(staged.withColumn("__run", F.max(value_col).over(w)), "runmax")
     vtype = dict(df.dtypes)[value_col]
     totals = local.groupBy("__pid").agg(F.max(value_col).alias("__tot")).collect()
     def _is_nan(x) -> bool:

@@ -32,7 +32,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..functions import dsum, dsum_sql
-from ..io import table
+from ..io import fixture_suffix, scratch_path, stream_source_dir, table
 from ..registry import ORACLE, query
 from ..llm.text import _QUALITY_SQL as _TEXT_QUALITY_SQL
 
@@ -65,32 +65,13 @@ def _parquet_ts_is_nanos(path: str, col: str = "ts") -> bool:
     return getattr(t, "unit", None) == "ns"
 
 
-def _stream_src_dir(sf_dir: str, table_name: str) -> str:
-    """The file-stream source wants a *directory*; stage one containing a
-    symlink to the fixture parquet (read-only testdata stays untouched)."""
-    staged = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_stream_src",
-        sf_dir.strip("/").replace("/", "_") + "_" + table_name,
-    )
-    os.makedirs(staged, exist_ok=True)
-    link = os.path.join(staged, f"{table_name}.parquet")
-    if not os.path.exists(link):
-        os.symlink(f"{sf_dir}/{table_name}.parquet", link)
-    return staged
-
-
-def _events_stream_dir(sf_dir: str) -> str:
-    return _stream_src_dir(sf_dir, "events")
-
-
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events as an unbounded stream (file-replay source)."""
     nanos = _parquet_ts_is_nanos(f"{sf_dir}/events.parquet")
     if nanos:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = spark.readStream.schema(_events_raw_schema(nanos)).parquet(
-        _events_stream_dir(sf_dir)
+        stream_source_dir(sf_dir, "events")
     )
     if nanos:
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -423,7 +404,7 @@ def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixture has no ingest timestamp, and the curation stream needs
     one for watermarking; a real corpus feed carries its crawl time."""
     raw = spark.readStream.schema(_DOCS_RAW).parquet(
-        _stream_src_dir(sf_dir, "documents")
+        stream_source_dir(sf_dir, "documents")
     )
     # +1h offset: doc_id 0 must not land exactly on the epoch — the initial
     # watermark is epoch 0 and stateful dedup treats ts <= watermark as late.
@@ -1076,9 +1057,7 @@ def q342_stream_corpus_dedup(spark, sf_dir) -> DataFrame:
     import time
 
     tname = "t_q342_index"
-    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-    os.makedirs(base, exist_ok=True)
-    loc = os.path.join(base, f"{tname}_tbl_{os.path.basename(sf_dir)}")
+    loc = scratch_path(f"{tname}_tbl_{os.path.basename(sf_dir)}")
     shutil.rmtree(loc, ignore_errors=True)
     spark.sql(f"DROP TABLE IF EXISTS {tname}")
     spark.sql(
@@ -1437,22 +1416,14 @@ def q351_stream_retractable_mv(spark, sf_dir) -> DataFrame:
     already-committed groups (and their watermarks) in the partitions
     being swapped; full crash atomicity across partitions needs a
     transactional table format (Delta/Iceberg), where the same merge
-    algebra drops in unchanged. The catalog table name is suffixed
-    with the fixture basename (like its LOCATION already was), so
-    concurrent sessions on different fixtures no longer clobber each
-    other's MV."""
+    algebra drops in unchanged. The catalog table name and its
+    LOCATION carry io.fixture_suffix, so concurrent sessions on
+    different fixtures never clobber each other's MV."""
     import shutil
     import time
 
-    from ..io import fixture_suffix
-
-    # Sanitizing the basename alone can alias distinct fixtures ('sf0.1'
-    # and 'sf0_1' both sanitize to 'sf0_1' — ADVICE r12); fixture_suffix
-    # adds a hash of the RAW basename so name AND location stay unique.
     tname = f"t_q351_mv_{fixture_suffix(sf_dir)}"
-    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-    os.makedirs(base, exist_ok=True)
-    loc = os.path.join(base, f"{tname}_tbl")
+    loc = scratch_path(f"{tname}_tbl")
     retractable_mv_create(spark, tname, loc)
 
     src = tempfile.mkdtemp(prefix="eclypsium_mv_feed_")
@@ -1751,14 +1722,9 @@ def rag_index_tables(spark, sf_dir: str) -> tuple[str, str]:
     PARTITIONED BY the bounded token-hash shard column so a cluster
     deployment clusters/buckets by it) and the pooled dense side (one
     exact q178-pooled vector per document group). Names and locations
-    carry the sanitized fixture basename PLUS a short hash of the raw
-    basename (io.fixture_suffix — the q351 ADVICE r12 rule) so
-    concurrent sessions on distinct fixtures can never alias."""
-    from ..io import fixture_suffix
-
+    carry io.fixture_suffix, so concurrent sessions on distinct fixtures
+    never alias."""
     suf = fixture_suffix(sf_dir)
-    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-    os.makedirs(base, exist_ok=True)
     tpost, tpool = f"t_q362_post_{suf}", f"t_q362_pool_{suf}"
     for tname, ddl in (
         (
@@ -1768,7 +1734,7 @@ def rag_index_tables(spark, sf_dir: str) -> tuple[str, str]:
         ),
         (tpool, "doc BIGINT, vec ARRAY<DOUBLE>"),
     ):
-        loc = os.path.join(base, f"{tname}_tbl")
+        loc = scratch_path(f"{tname}_tbl")
         shutil.rmtree(loc, ignore_errors=True)
         spark.sql(f"DROP TABLE IF EXISTS {tname}")
         part = "PARTITIONED BY (shard)" if tname == tpost else ""
@@ -1954,13 +1920,9 @@ def ivf_ingest_table(spark, sf_dir: str) -> str:
     q72's docstring names for 100 TB ("the assigned table would be
     written partitioned by cent_id so a query touches one partition").
     Fixture-suffix naming per the q351/q362 anti-aliasing rule."""
-    from ..io import fixture_suffix
-
     suf = fixture_suffix(sf_dir)
-    base = os.path.join(tempfile.gettempdir(), "eclypsium_etl_spark")
-    os.makedirs(base, exist_ok=True)
     tasg = f"t_q365_asg_{suf}"
-    loc = os.path.join(base, f"{tasg}_tbl")
+    loc = scratch_path(f"{tasg}_tbl")
     shutil.rmtree(loc, ignore_errors=True)
     spark.sql(f"DROP TABLE IF EXISTS {tasg}")
     spark.sql(

@@ -35,6 +35,24 @@ def make_duck(sf_dir: str):
     return con
 
 
+def derived_fixture(name: str, build) -> str:
+    """Directory ``name`` under the engine's scratch root holding a
+    derived fixture, built at most once across processes: ``build(path)``
+    writes the tables into the fresh directory ``path``, and
+    ``io.build_once`` adds the ``_SUCCESS`` marker and commits it."""
+    import os
+
+    from eclypsium_etl_spark import io  # lazy: perfbench imports this module
+
+    def write(path: str) -> None:
+        os.makedirs(path)
+        build(path)
+
+    out = io.scratch_path(name)
+    io.build_once(out, write)
+    return out
+
+
 def _norm_cell(v):
     """Canonicalize one cell so identical logical values compare equal
     across engines/dtypes."""

@@ -26,7 +26,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 import pytest
 
@@ -34,7 +33,7 @@ from eclypsium_etl_spark import registry
 from eclypsium_etl_spark.io import source_stamp
 
 from .conftest import FIXTURE_TABLES, SF_CHECK, make_duck
-from .parity import compare
+from .parity import compare, derived_fixture
 
 pytestmark = pytest.mark.skipif(
     not os.environ.get("SPARK_GRAFT_CLUSTERED_SWEEP"),
@@ -65,52 +64,39 @@ def _clustered_fixture_dir() -> str:
     import pyarrow.parquet as pq
 
     stamp = source_stamp(os.path.join(SF_CHECK, "embeddings.parquet"))
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
-        f"clufx_v1_{os.path.basename(SF_CHECK)}_{stamp}",
-    )
-    done = os.path.join(out, "_SUCCESS")
-    if os.path.exists(done):
-        return out
-    tmp = f"{out}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
-    src = os.path.join(SF_CHECK, "embeddings.parquet")
-    t = pq.read_table(src)
-    vec_ids = t.column("vec_id").to_numpy()
-    emb = np.array(t.column("embedding").to_pylist(), dtype=np.float64)
-    order = np.argsort(vec_ids)
-    id_to_row = {int(vec_ids[i]): i for i in range(len(vec_ids))}
-    anchors = np.stack(
-        [emb[id_to_row[a]] for a in range(_N_ANCHORS)]
-    )
-    aidx = np.array([_anchor_of(int(v) % 16) for v in vec_ids])
-    blend = _BLEND * anchors[aidx] + emb
-    norm = np.sqrt((blend * blend).sum(axis=1, keepdims=True))
-    clustered = (blend / norm).astype(np.float32)
-    del order
-    arr = pa.array(
-        [row.tolist() for row in clustered],
-        type=t.schema.field("embedding").type,
-    )
-    out_t = t.set_column(
-        t.schema.get_field_index("embedding"), "embedding", arr
-    )
-    pq.write_table(out_t, os.path.join(tmp, "embeddings.parquet"))
-    for name in FIXTURE_TABLES:
-        if name == "embeddings":
-            continue
-        shutil.copyfile(
-            os.path.join(SF_CHECK, f"{name}.parquet"),
-            os.path.join(tmp, f"{name}.parquet"),
+
+    def build(tmp: str) -> None:
+        src = os.path.join(SF_CHECK, "embeddings.parquet")
+        t = pq.read_table(src)
+        vec_ids = t.column("vec_id").to_numpy()
+        emb = np.array(t.column("embedding").to_pylist(), dtype=np.float64)
+        order = np.argsort(vec_ids)
+        id_to_row = {int(vec_ids[i]): i for i in range(len(vec_ids))}
+        anchors = np.stack(
+            [emb[id_to_row[a]] for a in range(_N_ANCHORS)]
         )
-    open(os.path.join(tmp, "_SUCCESS"), "w").close()
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race: use theirs
-    return out
+        aidx = np.array([_anchor_of(int(v) % 16) for v in vec_ids])
+        blend = _BLEND * anchors[aidx] + emb
+        norm = np.sqrt((blend * blend).sum(axis=1, keepdims=True))
+        clustered = (blend / norm).astype(np.float32)
+        del order
+        arr = pa.array(
+            [row.tolist() for row in clustered],
+            type=t.schema.field("embedding").type,
+        )
+        out_t = t.set_column(
+            t.schema.get_field_index("embedding"), "embedding", arr
+        )
+        pq.write_table(out_t, os.path.join(tmp, "embeddings.parquet"))
+        for name in FIXTURE_TABLES:
+            if name == "embeddings":
+                continue
+            shutil.copyfile(
+                os.path.join(SF_CHECK, f"{name}.parquet"),
+                os.path.join(tmp, f"{name}.parquet"),
+            )
+
+    return derived_fixture(f"clufx_v1_{os.path.basename(SF_CHECK)}_{stamp}", build)
 
 
 @pytest.fixture(scope="session")

@@ -42,8 +42,6 @@ Gated behind SPARK_GRAFT_EMPTY_SWEEP=1 (~6 min for the registry):
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 import duckdb
 import pytest
@@ -51,7 +49,7 @@ import pytest
 from eclypsium_etl_spark import registry
 
 from .conftest import FIXTURE_TABLES, SF_CHECK, make_duck
-from .parity import compare
+from .parity import compare, derived_fixture
 
 pytestmark = pytest.mark.skipif(
     not os.environ.get("SPARK_GRAFT_EMPTY_SWEEP"),
@@ -78,27 +76,16 @@ GREEN = sorted(set(ORACLE) - set(PRECONDITION) - RUN_ONLY)
 
 def _empty_fixture_dir() -> str:
     """Zero-row copies of every fixture table (real schemas, no data)."""
-    out = os.path.join(
-        tempfile.gettempdir(), "eclypsium_etl_spark", "emptyfx_v1"
-    )
-    done = os.path.join(out, "_SUCCESS")
-    if os.path.exists(done):
-        return out
-    tmp = f"{out}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"COPY (SELECT * FROM read_parquet('{SF_CHECK}/{t}.parquet') "
-            f"WHERE false) TO '{tmp}/{t}.parquet' (FORMAT PARQUET)"
-        )
-    open(os.path.join(tmp, "_SUCCESS"), "w").close()
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+
+    def build(tmp: str) -> None:
+        con = duckdb.connect()
+        for t in FIXTURE_TABLES:
+            con.execute(
+                f"COPY (SELECT * FROM read_parquet('{SF_CHECK}/{t}.parquet') "
+                f"WHERE false) TO '{tmp}/{t}.parquet' (FORMAT PARQUET)"
+            )
+
+    return derived_fixture("emptyfx_v1", build)
 
 
 @pytest.fixture(scope="session")

@@ -417,14 +417,14 @@ def test_compaction_collapses_file_count(spark):
     every row preserved."""
     import os
 
-    from eclypsium_etl_spark.operators.sources import _tmpdir
+    from eclypsium_etl_spark.io import scratch_path
     from eclypsium_etl_spark.registry import load_all
 
     q, _ = load_all()
     sf = "/root/testdata/sf0.01"
     out = q["q235_compact_small_files"](spark, sf)
-    frag = _tmpdir(f"q235_frag_{os.path.basename(sf)}")
-    comp = _tmpdir(f"q235_compact_{os.path.basename(sf)}")
+    frag = scratch_path(f"q235_frag_{os.path.basename(sf)}")
+    comp = scratch_path(f"q235_compact_{os.path.basename(sf)}")
     n_frag = sum(1 for e in os.scandir(frag) if e.name.endswith(".parquet"))
     n_comp = sum(1 for e in os.scandir(comp) if e.name.endswith(".parquet"))
     assert n_frag == 64 and n_comp == 1

@@ -43,7 +43,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 import duckdb
 import pytest
@@ -52,7 +51,7 @@ from eclypsium_etl_spark import registry
 from eclypsium_etl_spark.io import source_stamp
 
 from .conftest import FIXTURE_TABLES, SF_CHECK, make_duck
-from .parity import compare
+from .parity import compare, derived_fixture
 
 pytestmark = pytest.mark.skipif(
     not os.environ.get("SPARK_GRAFT_SKEW_SWEEP"),
@@ -114,35 +113,22 @@ def _skew_fixture_dir() -> str:
     rewritten via DuckDB, untouched tables copied byte-identical. The
     _SUCCESS marker gates rebuilds, same discipline as io memos."""
     stamp = source_stamp(os.path.join(SF_CHECK, "orders.parquet"))
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
-        f"skewfx_v1_{os.path.basename(SF_CHECK)}_{stamp}",
-    )
-    done = os.path.join(out, "_SUCCESS")
-    if os.path.exists(done):
-        return out
-    tmp = f"{out}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
-    con = duckdb.connect()
-    masks = _masks(con, SF_CHECK)
-    for t in FIXTURE_TABLES:
-        src = os.path.join(SF_CHECK, f"{t}.parquet")
-        dst = os.path.join(tmp, f"{t}.parquet")
-        if t in masks:
-            con.execute(
-                f"COPY (SELECT * REPLACE ({masks[t]}) "
-                f"FROM read_parquet('{src}')) TO '{dst}' (FORMAT PARQUET)"
-            )
-        else:
-            shutil.copyfile(src, dst)
-    open(os.path.join(tmp, "_SUCCESS"), "w").close()
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race: use theirs
-    return out
+
+    def build(tmp: str) -> None:
+        con = duckdb.connect()
+        masks = _masks(con, SF_CHECK)
+        for t in FIXTURE_TABLES:
+            src = os.path.join(SF_CHECK, f"{t}.parquet")
+            dst = os.path.join(tmp, f"{t}.parquet")
+            if t in masks:
+                con.execute(
+                    f"COPY (SELECT * REPLACE ({masks[t]}) "
+                    f"FROM read_parquet('{src}')) TO '{dst}' (FORMAT PARQUET)"
+                )
+            else:
+                shutil.copyfile(src, dst)
+
+    return derived_fixture(f"skewfx_v1_{os.path.basename(SF_CHECK)}_{stamp}", build)
 
 
 @pytest.fixture(scope="session")

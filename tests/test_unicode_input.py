@@ -32,7 +32,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 import pytest
 
@@ -40,7 +39,7 @@ from eclypsium_etl_spark import registry
 from eclypsium_etl_spark.io import source_stamp
 
 from .conftest import FIXTURE_TABLES, SF_CHECK, make_duck
-from .parity import compare
+from .parity import compare, derived_fixture
 
 pytestmark = pytest.mark.skipif(
     not os.environ.get("SPARK_GRAFT_UNICODE_SWEEP"),
@@ -57,48 +56,35 @@ def _unicode_fixture_dir() -> str:
     import pandas as pd
 
     stamp = source_stamp(os.path.join(SF_CHECK, "documents.parquet"))
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "eclypsium_etl_spark",
-        f"unicodefx_v1_{os.path.basename(SF_CHECK)}_{stamp}",
-    )
-    done = os.path.join(out, "_SUCCESS")
-    if os.path.exists(done):
-        return out
-    tmp = f"{out}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
-    d = pd.read_parquet(os.path.join(SF_CHECK, "documents.parquet"))
 
-    def tx(row):
-        t, k = row["text"], row["doc_id"] % 7
-        if k == 1:
-            return "数据 处理 模型 " + t            # CJK tokens
-        if k == 2:
-            return "dätä café naïve Müller " + t     # accented Latin
-        if k == 3:
-            return "👍 " + t + " 🚀"                 # non-BMP emoji
-        if k == 4:
-            return "данные модель " + t              # Cyrillic
-        if k == 5:
-            return "école " + t                # DECOMPOSED accent
-        return t
+    def build(tmp: str) -> None:
+        d = pd.read_parquet(os.path.join(SF_CHECK, "documents.parquet"))
 
-    d["text"] = d.apply(tx, axis=1)
-    d["n_chars"] = d["text"].str.len()
-    d.to_parquet(os.path.join(tmp, "documents.parquet"), index=False)
-    for t in FIXTURE_TABLES:
-        if t != "documents":
-            shutil.copyfile(
-                os.path.join(SF_CHECK, f"{t}.parquet"),
-                os.path.join(tmp, f"{t}.parquet"),
-            )
-    open(os.path.join(tmp, "_SUCCESS"), "w").close()
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+        def tx(row):
+            t, k = row["text"], row["doc_id"] % 7
+            if k == 1:
+                return "数据 处理 模型 " + t            # CJK tokens
+            if k == 2:
+                return "dätä café naïve Müller " + t     # accented Latin
+            if k == 3:
+                return "👍 " + t + " 🚀"                 # non-BMP emoji
+            if k == 4:
+                return "данные модель " + t              # Cyrillic
+            if k == 5:
+                return "école " + t                # DECOMPOSED accent
+            return t
+
+        d["text"] = d.apply(tx, axis=1)
+        d["n_chars"] = d["text"].str.len()
+        d.to_parquet(os.path.join(tmp, "documents.parquet"), index=False)
+        for t in FIXTURE_TABLES:
+            if t != "documents":
+                shutil.copyfile(
+                    os.path.join(SF_CHECK, f"{t}.parquet"),
+                    os.path.join(tmp, f"{t}.parquet"),
+                )
+
+    return derived_fixture(f"unicodefx_v1_{os.path.basename(SF_CHECK)}_{stamp}", build)
 
 
 @pytest.fixture(scope="session")
